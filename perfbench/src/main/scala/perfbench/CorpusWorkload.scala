@@ -22,8 +22,8 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
     work: Path, seed: Long) extends Workload(spark, tracer, jobs, work, seed) {
 
   val HistoryDocs = 300
-  val Segments = 5
-  val FreshPerSegment = 100
+  val Segments = 8
+  val FreshPerSegment = 40
   val PlantedShare = 0.05
   val ContaminatedShare = 0.03
   val EvalDocs = 100
@@ -36,12 +36,31 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
 
   private var plan: Gen.CorpusPlan = _
   private var inDir: Path = _
+  /** A run directory seeded with the history and not used yet. */
+  private var seeded: Option[Path] = None
+  private var nSeeded = 0
 
-  def setup(rep: Int): Unit = {
-    if (inDir != null) Dirs.delete(inDir)
-    inDir = Dirs.fresh(work.resolve(s"corpus-in-$rep"))
+  def generate(): Unit = {
+    inDir = Dirs.fresh(work.resolve("corpus-in"))
     plan = Gen.writeCorpus(inDir, seed, HistoryDocs, Segments, FreshPerSegment,
       PlantedShare, ContaminatedShare, EvalDocs, Parts)
+  }
+
+  def setup(): Unit = {
+    seeded.foreach(Dirs.delete)
+    seeded = Some(seedHistory())
+  }
+
+  /** A new run directory holding the history the deployment already has:
+    * the LSH index and the Bloom epoch of the history documents.
+    */
+  private def seedHistory(): Path = {
+    val root = Dirs.fresh(work.resolve(s"corpus-run-$nSeeded"))
+    nSeeded += 1
+    val hist = spark.read.schema(docSchema).json(plan.historyPath.toString)
+    Dedup.writeLshIndex(hist, root.resolve("idx").toString)
+    Sketches.bloomBits(hist, col("text")).write.json(root.resolve("bloom").resolve("epoch=-1").toString)
+    root
   }
 
   private case class Seg(iter: Int, k: Int, ns: Long, traced: Boolean,
@@ -54,25 +73,18 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
 
   private def write(df: DataFrame, p: Path): Unit = df.write.parquet(p.toString)
 
-  /** One iteration over the first `nSegments` segments, then a curate
-    * pass if `curatePass`.
-    */
-  private def iteration(record: Boolean, nSegments: Int, curatePass: Boolean): Unit = {
+  /** One iteration: every segment through admission, then a curate pass. */
+  private def iteration(): Unit = {
     val i = nIter
     nIter += 1
     val key = s"iter-$i"
     // a new directory per iteration: nothing of an earlier run's index,
     // state, checkpoint or output is visible to this one
-    Dirs.delete(work.resolve(s"corpus-run-${i - 1}"))
-    val root = Dirs.fresh(work.resolve(s"corpus-run-$i"))
+    val root = seeded.getOrElse(seedHistory())
+    seeded = None
     val Seq(idx, bloom, outDir, ckpt, in, landing, cur) =
       Seq("idx", "bloom", "out", "ckpt", "in", "landing", "cur").map(root.resolve)
     Files.createDirectories(in); Files.createDirectories(landing)
-    // the history the deployment already has: the seeded LSH index and
-    // Bloom epoch (set-up, not admission)
-    val hist = spark.read.schema(docSchema).json(plan.historyPath.toString)
-    Dedup.writeLshIndex(hist, idx.toString)
-    Sketches.bloomBits(hist, col("text")).write.json(bloom.resolve("epoch=-1").toString)
 
     val jobs0 = jobs.jobs(spark)
     val state = Seq(idx, bloom, outDir)
@@ -85,7 +97,7 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
     q.processAllAvailable()
     val paused = tracer.paused
     try {
-      plan.segments.take(nSegments).zipWithIndex.foreach { case (seg, k) =>
+      plan.segments.zipWithIndex.foreach { case (seg, k) =>
         // the traced run alternates traced and untraced segments
         tracer.paused = paused || k % 2 == 1
         val before = if (tracer.on) state.map(p => Dirs.usage(p)._2).sum else 0L
@@ -102,35 +114,34 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
           val ns = System.nanoTime() - t0
           val added = if (tracer.on) state.map(p => Dirs.usage(p)._2).sum - before else 0L
           // micro-batch 0 is the stream's first, empty one
-          if (record) segs += Seg(i, k, ns, tracer.on, runId, k + 1L, added)
+          segs += Seg(i, k, ns, tracer.on, runId, k + 1L, added)
           q.exception.isEmpty
         }
         out.op(s"$key segment $k like-for-like") { guardJobs("segment", jobs.jobs(spark) - segJobs0) }
+        HeapPeak.sample()
       }
     } finally { q.stop(); tracer.paused = paused }
     val admitJobs = jobs.jobs(spark) - jobs0
     val indexFiles = Dirs.usage(idx)._1
-    val admitted = checkAdmission(key, outDir, plan.planted.take(nSegments))
+    val admitted = checkAdmission(key, outDir, plan.planted)
 
-    if (curatePass) {
-      val admittedIds = spark.read.parquet(outDir.toString).filter(col("admit")).select("doc_id")
-      val jobs2 = jobs.jobs(spark)
-      val t0 = System.nanoTime()
-      tracer.span("curate", key) {
-        curate(key, cur, admittedIds)
-      }
-      val curateNs = System.nanoTime() - t0
-      val curateJobs = jobs.jobs(spark) - jobs2
-      val corpusDocs = checkCurate(key, cur)
-      graft.util.Scratch.release(spark)
-      if (record) {
-        out.op(s"$key admit like-for-like") { guardJobs("admit", admitJobs) }
-        out.op(s"$key curate like-for-like") { guardJobs("curate", curateJobs) }
-        val stored = Seq(idx, bloom, outDir, ckpt, cur).map(p => Dirs.usage(p)._2).sum
-        iters += Iter(segs.filter(_.iter == i).map(_.ns).sum, curateNs, corpusDocs,
-          indexFiles, admitted, stored)
-      }
+    val admittedIds = spark.read.parquet(outDir.toString).filter(col("admit")).select("doc_id")
+    val jobs2 = jobs.jobs(spark)
+    val t0 = System.nanoTime()
+    tracer.span("curate", key) {
+      curate(key, cur, admittedIds)
     }
+    val curateNs = System.nanoTime() - t0
+    HeapPeak.sample()
+    val curateJobs = jobs.jobs(spark) - jobs2
+    val corpusDocs = checkCurate(key, cur)
+    graft.util.Scratch.release(spark)
+    out.op(s"$key admit like-for-like") { guardJobs("admit", admitJobs) }
+    out.op(s"$key curate like-for-like") { guardJobs("curate", curateJobs) }
+    val stored = Seq(idx, bloom, outDir, ckpt, cur).map(p => Dirs.usage(p)._2).sum
+    iters += Iter(segs.filter(_.iter == i).map(_.ns).sum, curateNs, corpusDocs,
+      indexFiles, admitted, stored)
+    Dirs.delete(root)
   }
 
   private def curate(key: String, cur: Path, admittedIds: DataFrame): Unit = {
@@ -241,7 +252,7 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
     // a new iteration starts only if one more like the last fits
     while (iters.isEmpty || System.nanoTime() - start + last <= seconds * 1e9) {
       val t = System.nanoTime()
-      iteration(record = true, nSegments = Segments, curatePass = true)
+      iteration()
       last = System.nanoTime() - t
     }
   }
@@ -299,6 +310,8 @@ final class CorpusWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
       L(s"operators.$op.task_cpu_s") = (st.map(_.taskCpuNs).sum / 1e9 / k, "s")
       L(s"operators.$op.shuffle_mb") = (st.map(_.shuffleWriteBytes).sum / 1048576.0 / k, "MB")
       L(s"operators.$op.spill_mb") = (st.map(_.spillBytes).sum / 1048576.0 / k, "MB")
+      L(s"operators.$op.heavy_stage_tasks") =
+        (Stats.median(st.map(_.heavyStageTasks.toDouble)), "count")
     }
     val untraced = segs.filterNot(_.traced)
     if (traced.nonEmpty && untraced.nonEmpty)

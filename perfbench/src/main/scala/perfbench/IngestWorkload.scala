@@ -26,12 +26,30 @@ final class IngestWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
 
   private var plan: Gen.IngestPlan = _
   private var inDir: Path = _
+  /** An output directory seeded with the feed and not used yet. */
+  private var seeded: Option[Path] = None
+  private var nSeeded = 0
 
-  def setup(rep: Int): Unit = {
-    if (inDir != null) Dirs.delete(inDir)
-    inDir = Dirs.fresh(work.resolve(s"ingest-in-$rep"))
+  def generate(): Unit = {
+    inDir = Dirs.fresh(work.resolve("ingest-in"))
     plan = Gen.writeIngest(inDir, seed, Projects, Scale, CorruptShare, Batches,
       UpdatesPerBatch, CreatesPerBatch)
+  }
+
+  def setup(): Unit = {
+    seeded.foreach(Dirs.delete)
+    seeded = Some(seedFeed())
+  }
+
+  /** A new output directory whose parquet version feed holds version 1 of
+    * every patient: the store the deployment already has.
+    */
+  private def seedFeed(): Path = {
+    val root = Dirs.fresh(work.resolve(s"ingest-out-$nSeeded"))
+    nSeeded += 1
+    FhirIO.readNdjson(spark, plan.feedSeed.toString, FhirSchemas.patient)
+      .write.parquet(root.resolve("feed").toString)
+    root
   }
 
   private case class Iter(traced: Boolean, ns: Long, outBytes: Long,
@@ -42,15 +60,13 @@ final class IngestWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
   private def r5(t: String) = inDir.resolve(s"r5/$t.ndjson").toString
 
   /** One full pass into fresh output directories, checked afterwards. */
-  private def iteration(record: Boolean): Unit = {
+  private def iteration(): Unit = {
     val i = nIter
     nIter += 1
     val key = s"iter-$i"
-    val outRoot = Dirs.fresh(work.resolve("ingest-out"))
+    val outRoot = seeded.getOrElse(seedFeed())
+    seeded = None
     val feed = outRoot.resolve("feed").toString
-    // seeding the store with version-1 rows is set-up, not ingest
-    FhirIO.readNdjson(spark, plan.feedSeed.toString, FhirSchemas.patient)
-      .write.parquet(feed)
     val batchFiles, batchBytes = mutable.ArrayBuffer.empty[Long]
     val jobs0 = jobs.jobs(spark)
     val t0 = System.nanoTime()
@@ -89,6 +105,7 @@ final class IngestWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
       }
     }
     val ns = System.nanoTime() - t0
+    HeapPeak.sample()
     out.op(s"$key like-for-like") { guardJobs("iteration", jobs.jobs(spark) - jobs0) }
     // output checks, after the clock stops
     out.op(s"$key assay count") {
@@ -107,11 +124,15 @@ final class IngestWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
       got == plan.expectedVersions
     }
     graft.util.Scratch.release(spark)
-    if (record)
-      iters += Iter(tracer.on, ns, Dirs.usage(outRoot)._2, batchFiles.toSeq, batchBytes.toSeq, key)
+    iters += Iter(tracer.on, ns, Dirs.usage(outRoot)._2, batchFiles.toSeq, batchBytes.toSeq, key)
+    Dirs.delete(outRoot)
   }
 
-  def warmup(): Unit = iteration(record = false)
+  /** No warm-up: the timed iteration starts cold. The reference runs its
+    * ETL as a batch job, once per process, so its users pay code
+    * generation and JIT warm-up on every run.
+    */
+  def warmup(): Unit = ()
 
   def timed(seconds: Double): Unit = {
     val start = System.nanoTime()
@@ -119,7 +140,7 @@ final class IngestWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
     // a new iteration starts only if one more like the last fits
     while (i == 0 || System.nanoTime() - start + iters.last.ns <= seconds * 1e9) {
       tracer.paused = i % 2 == 1
-      iteration(record = true)
+      iteration()
       i += 1
     }
     tracer.paused = false

@@ -29,9 +29,8 @@ object Main {
     "setup_s" -> "s", "op_p50_ms" -> "ms", "throughput_per_s" -> "items/s",
     "stored_bytes_per_input_byte" -> "ratio", "heap_live_peak_mb" -> "MB")
 
-  /** Per-layer metrics of the workloads in `BENCHMARK.json` (name -> unit). A layer
-    * the workload does not reach reads 0. `fhir_ingest` writes its own
-    * layer metrics to its trace file and report.
+  /** Per-layer metrics of every workload (name -> unit). A layer the
+    * workload does not reach reads 0.
     */
   val PerLayer: Seq[(String, String)] = {
     val search = Seq("build_ms" -> "ms", "compile_ms" -> "ms", "exec_ms" -> "ms",
@@ -41,7 +40,7 @@ object Main {
     val ops = for {
       op <- Seq("semdedup", "containment", "lm_score", "decontaminate", "bpe")
       (m, u) <- Seq("s" -> "s", "eager_jobs" -> "count", "task_cpu_s" -> "s",
-        "shuffle_mb" -> "MB", "spill_mb" -> "MB")
+        "shuffle_mb" -> "MB", "spill_mb" -> "MB", "heavy_stage_tasks" -> "count")
     } yield s"operators.$op.$m" -> u
     search.map { case (n, u) => s"fhir.search.$n" -> u } ++ Seq(
       "streaming.admit.jobs_per_segment" -> "count", "streaming.admit.tasks_per_segment" -> "count",
@@ -50,7 +49,10 @@ object Main {
       "util.commit.bytes_per_segment" -> "bytes") ++ ops ++ Seq(
       "spark.jobs" -> "count", "spark.tasks" -> "count", "spark.task_run_s" -> "s",
       "spark.task_cpu_s" -> "s", "spark.gc_s" -> "s", "spark.shuffle_write_mb" -> "MB",
-      "spark.spill_mb" -> "MB", "spark.job_busy_ratio" -> "ratio", "trace.overhead_pct" -> "%")
+      "spark.spill_mb" -> "MB", "spark.job_busy_ratio" -> "ratio", "trace.overhead_pct" -> "%") ++ Seq(
+      "fhir.transform.s" -> "s", "fhir.transform.jobs" -> "count", "fhir.assay.s" -> "s",
+      "fhir.assay.shuffle_mb" -> "MB", "fhir.store.update_create_ms" -> "ms",
+      "util.commit.files_per_batch" -> "files", "util.commit.bytes_per_batch" -> "bytes")
   }
 
   val SetupReps = 3
@@ -99,7 +101,6 @@ object Main {
     try {
       val jobs = new JobCounter
       spark.sparkContext.addSparkListener(jobs)
-      HeapPeak.install()
       val tracer = new Tracer(spark, trace)
       val w: Workload = workload match {
         case "fhir_search" => new SearchWorkload(spark, tracer, jobs, work, seed)
@@ -108,26 +109,25 @@ object Main {
       }
       // set-up and warm-up are never traced
       tracer.paused = true
-      val setupNs = (0 until SetupReps).map { rep =>
-        val s = System.nanoTime(); w.setup(rep); System.nanoTime() - s
+      val genStart = System.nanoTime()
+      w.generate()
+      val genNs = System.nanoTime() - genStart
+      val setupNs = (0 until SetupReps).map { _ =>
+        val s = System.nanoTime(); w.setup(); System.nanoTime() - s
       }
       val warmStart = System.nanoTime()
       w.warmup()
       val warmNs = System.nanoTime() - warmStart
       tracer.paused = false
-      HeapPeak.active = true
       val timedStart = System.nanoTime()
       w.timed(seconds)
       val timedNs = System.nanoTime() - timedStart
-      // at least one sample even if the timed phase triggered no GC
-      System.gc()
-      Thread.sleep(200)
-      HeapPeak.active = false
       tracer.close()
       w.finish()
 
       val out = w.out
-      val setupS = Dirs.secs(sessionNs) + Stats.median(setupNs.map(Dirs.secs)) + Dirs.secs(warmNs)
+      val setupS = Dirs.secs(sessionNs) + Dirs.secs(genNs) + Stats.median(setupNs.map(Dirs.secs)) +
+        Dirs.secs(warmNs)
       out.e2e("setup_s") = (setupS, "s")
       out.e2e("heap_live_peak_mb") = (HeapPeak.peakMb, "MB")
       out.report("setup_s") = (setupS, "s")
@@ -142,9 +142,9 @@ object Main {
         "attempted" -> out.attempted, "failed" -> out.failed, "metrics" -> metricsJson(names, got))
       val report = mutable.LinkedHashMap[String, Any]("workload" -> workload, "seed" -> seed,
         "trace" -> trace, "cores" -> cores, "timed_s" -> Dirs.secs(timedNs),
-        "setup_breakdown_s" -> Map("session" -> Dirs.secs(sessionNs),
-          "inputs_and_load_median" -> Stats.median(setupNs.map(Dirs.secs)),
-          "inputs_and_load_reps" -> setupNs.map(Dirs.secs), "warmup" -> Dirs.secs(warmNs)),
+        "setup_breakdown_s" -> Map("session" -> Dirs.secs(sessionNs), "inputs" -> Dirs.secs(genNs),
+          "engine_setup_median" -> Stats.median(setupNs.map(Dirs.secs)),
+          "engine_setup_reps" -> setupNs.map(Dirs.secs), "warmup" -> Dirs.secs(warmNs)),
         "inputs" -> out.inputs, "jobs_per_unit" -> w.jobCounts,
         "metrics" -> out.report.map { case (k, (v, u)) => k -> Map("value" -> v, "unit" -> u) },
         "failures" -> out.failures)

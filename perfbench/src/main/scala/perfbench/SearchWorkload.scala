@@ -24,22 +24,38 @@ object SearchReq {
   final case class Rows(rows: Seq[String]) extends Answer
   final case class Total(n: Long) extends Answer
 
-  /** Request mix: template -> (variant -> requests per cycle of 20). */
-  val Templates: Seq[(String, Seq[(Int, Int)])] = Seq(
-    "read" -> Seq(0 -> 2, 1 -> 2), "everything" -> Seq(0 -> 2),
-    "filter" -> Seq(0 -> 2, 1 -> 2, 2 -> 1), "chain" -> Seq(0 -> 2),
-    "include" -> Seq(0 -> 2, 1 -> 1), "sort_page" -> Seq(0 -> 3), "total" -> Seq(0 -> 1))
-
-  /** One cycle of the mix as (template, variant) in a fixed interleaved
-    * order, the same for every seed; only the parameters come from the
-    * seed.
+  /** Request templates and how many variants each has. No traffic record
+    * of the reference exists to weight them by, so the mix gives every
+    * template the same weight: each appears `PerTemplate` times per cycle,
+    * and its variants take turns across cycles.
     */
-  val Cycle: IndexedSeq[(String, Int)] = {
-    val a = Templates.flatMap { case (t, vs) => vs.flatMap { case (v, n) => Seq.fill(n)((t, v)) } }.toArray
+  val Templates: Seq[(String, Int)] = Seq("read" -> 2, "everything" -> 1, "filter" -> 3,
+    "chain" -> 1, "include" -> 2, "sort_page" -> 1, "total" -> 1)
+  val PerTemplate = 2
+
+  /** The templates of one cycle in a fixed interleaved order, the same for
+    * every seed; only the parameters come from the seed.
+    */
+  private val order: IndexedSeq[String] = {
+    val a = Templates.flatMap(t => Seq.fill(PerTemplate)(t._1)).toArray
     val r = new java.util.SplittableRandom(20)
     for (i <- a.indices.reverse) { val j = r.nextInt(i + 1); val t = a(i); a(i) = a(j); a(j) = t }
     a.toIndexedSeq
   }
+
+  /** Cycle `c` of the mix as (template, variant) slots. */
+  def cycle(c: Int): IndexedSeq[(String, Int)] = {
+    val variants = Templates.toMap
+    val seen = mutable.Map.empty[String, Int].withDefaultValue(0)
+    order.map { t =>
+      val k = seen(t)
+      seen(t) = k + 1
+      (t, (c * PerTemplate + k) % variants(t))
+    }
+  }
+
+  /** Every (template, variant) once. */
+  val AllVariants: Seq[(String, Int)] = Templates.flatMap { case (t, n) => (0 until n).map(t -> _) }
 
   def draw(s: Gen.Store, r: java.util.SplittableRandom, slot: (String, Int)): SearchReq = {
     val (template, variant) = slot
@@ -153,11 +169,14 @@ final class SearchWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
   private def schema(t: String) =
     if (t == "DocumentReference") FhirSchemas.documentReferenceStore else FhirSchemas.byType(t)
 
-  def setup(rep: Int): Unit = {
-    tables.values.foreach(_.unpersist(true))
-    if (storeDir != null) Dirs.delete(storeDir)
-    storeDir = Dirs.fresh(work.resolve(s"store-$rep"))
+  def generate(): Unit = {
+    storeDir = Dirs.fresh(work.resolve("store"))
     store = Gen.writeStore(storeDir, seed)
+  }
+
+  /** Loads every type into a cached relation and counts it. */
+  def setup(): Unit = {
+    tables.values.foreach(_.unpersist(true))
     tables = Gen.StoreCounts.map(_._1).map { t =>
       t -> FhirIO.readNdjson(spark, storeDir.resolve(s"$t.ndjson").toString, schema(t)).cache()
     }.toMap
@@ -189,39 +208,39 @@ final class SearchWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
 
   def warmup(): Unit = {
     val r = Gen.rng(seed, 11)
-    // one full cycle of the mix before timing starts
-    Cycle.zipWithIndex.foreach { case (slot, i) => request(draw(store, r, slot), s"warm-$i", record = false) }
+    // every template and variant once before timing starts
+    AllVariants.zipWithIndex.foreach { case (slot, i) => request(draw(store, r, slot), s"warm-$i", record = false) }
   }
 
   private var timedNs = 0L
 
   def timed(seconds: Double): Unit = {
     val r = Gen.rng(seed, 12)
-    val start = System.nanoTime()
     var c = 0
     var last = 0L
     // whole cycles only, so every run's sample has the mix's composition;
     // a new cycle starts only if one more like the last fits
-    while (c == 0 || System.nanoTime() - start + last <= seconds * 1e9) {
+    while (c == 0 || timedNs + last <= seconds * 1e9) {
       val t = System.nanoTime()
       // the traced run alternates traced and untraced cycles, to price its
       // own overhead against interleaved untraced requests
       tracer.paused = c % 2 == 1
-      Cycle.indices.foreach { j =>
-        request(draw(store, r, Cycle(j)), s"req-${c * Cycle.size + j}", record = true)
+      cycle(c).zipWithIndex.foreach { case (slot, j) =>
+        request(draw(store, r, slot), s"req-${c * Templates.size * PerTemplate + j}", record = true)
       }
       last = System.nanoTime() - t
+      timedNs += last
+      HeapPeak.sample()
       c += 1
     }
     tracer.paused = false
-    timedNs = System.nanoTime() - start
   }
 
   def finish(): Unit = {
     val (files, bytes) = (store.lines.size.toLong, store.bytes)
     out.inputs ++= Seq("resources" -> store.lines.values.sum, "resources_per_type" -> store.lines,
       "files" -> files, "input_bytes" -> bytes, "requests" -> out.attempted,
-      "requests_per_cycle" -> Templates.map { case (t, vs) => t -> vs.map(_._2).sum }.toMap)
+      "requests_per_cycle" -> Templates.map(t => t._1 -> PerTemplate).toMap)
     val lat = stats.map(s => Dirs.ms(s.latencyNs)).toSeq
     val cachedBytes = spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum.toDouble
     if (lat.nonEmpty) {
@@ -271,15 +290,14 @@ final class SearchWorkload(spark: SparkSession, tracer: Tracer, jobs: JobCounter
         val xs = traced.filter(_.template == t).map(s => Dirs.ms(s.latencyNs)).toSeq
         L(s"fhir.search.$t.p50_ms") = (if (xs.isEmpty) 0.0 else Stats.median(xs), "ms")
       }
-      // traced against untraced requests of the same template, weighted
-      // by the mix
-      val both = Templates.flatMap { case (t, vs) =>
-        val n = vs.map(_._2).sum
+      // traced against untraced requests of the same template; the
+      // templates weigh alike, as in the mix
+      val both = Templates.flatMap { case (t, _) =>
         def med(tr: Boolean) = {
           val xs = stats.filter(s => s.template == t && s.traced == tr).map(s => Dirs.ms(s.latencyNs)).toSeq
           if (xs.isEmpty) None else Some(Stats.median(xs))
         }
-        for (a <- med(true); b <- med(false)) yield (n * a, n * b)
+        for (a <- med(true); b <- med(false)) yield (a, b)
       }
       if (both.nonEmpty)
         L("trace.overhead_pct") = ((both.map(_._1).sum / both.map(_._2).sum - 1) * 100, "%")

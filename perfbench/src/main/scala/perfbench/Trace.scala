@@ -3,13 +3,10 @@ package perfbench
 import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
-import javax.management.{Notification, NotificationEmitter, NotificationListener}
-import javax.management.openmbean.CompositeData
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import com.sun.management.GarbageCollectionNotificationInfo
 import org.apache.spark.PerfbenchBus
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
@@ -39,43 +36,37 @@ final class GroupStats {
   var shuffleWriteBytes = 0L
   var spillBytes = 0L
   val jobIntervals = mutable.ArrayBuffer.empty[(Long, Long)]
+  /** stage id -> (tasks, summed task run time in ms) */
+  val stages = mutable.HashMap.empty[Int, (Long, Long)]
 
   def add(o: GroupStats): Unit = {
     jobs += o.jobs; tasks += o.tasks; taskRunMs += o.taskRunMs
     taskCpuNs += o.taskCpuNs; gcMs += o.gcMs
     shuffleWriteBytes += o.shuffleWriteBytes; spillBytes += o.spillBytes
     jobIntervals ++= o.jobIntervals
+    stages ++= o.stages
   }
+
+  /** Tasks of the heavy stage: the one with the most task run time. */
+  def heavyStageTasks: Long = if (stages.isEmpty) 0L else stages.values.maxBy(_._2)._1
 }
 
-/** Highest heap in use right after a GC, from JMX GC notifications,
-  * while `active`.
+/** Highest live heap: the heap in use right after a full GC. The
+  * workloads call `sample` at the end of each unit of timed work, outside
+  * every clock. Samples after the JVM's own young GCs would also count
+  * old-generation garbage not yet collected; over ten seeds of one input
+  * size, the peak's quartiles lay 20% apart. The first forced GC lets
+  * Spark's context cleaner drop the shuffles and broadcasts it made
+  * unreachable; the second collects what the cleaner dropped.
   */
 object HeapPeak {
-  @volatile var active = false
-  @volatile private var peak = 0L
-  private var installed = false
+  private var peak = 0L
 
-  private val listener = new NotificationListener {
-    override def handleNotification(n: Notification, hb: Any): Unit =
-      if (active && n.getType ==
-          GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
-        val info = GarbageCollectionNotificationInfo.from(
-          n.getUserData.asInstanceOf[CompositeData])
-        val used = info.getGcInfo.getMemoryUsageAfterGc.values.asScala
-          .map(_.getUsed).sum
-        synchronized { if (used > peak) peak = used }
-      }
-  }
-
-  def install(): Unit = synchronized {
-    if (!installed) {
-      ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
-        case e: NotificationEmitter => e.addNotificationListener(listener, null, null)
-        case _ => ()
-      }
-      installed = true
-    }
+  def sample(): Unit = {
+    System.gc()
+    Thread.sleep(100)
+    System.gc()
+    peak = math.max(peak, ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed)
   }
 
   def peakMb: Double = peak / 1048576.0
@@ -136,6 +127,8 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
         val m = e.taskMetrics
         st.synchronized {
           st.tasks += 1
+          val (n, ms) = st.stages.getOrElse(e.stageId, (0L, 0L))
+          st.stages(e.stageId) = (n + 1, ms + (if (m == null) 0L else m.executorRunTime))
           if (m != null) {
             st.taskRunMs += m.executorRunTime
             st.taskCpuNs += m.executorCpuTime

@@ -39,15 +39,18 @@ final class Outcome {
   def note(msg: String): Unit = if (failures.size < 20) failures += msg.take(400)
 }
 
-/** One workload of the benchmark. `setup` runs several times (inputs
-  * regenerated into fresh directories each time) and the last one is
-  * used; `warmup` runs the workload's own work once, untimed; `timed`
-  * measures; `finish` derives the metrics.
+/** One workload of the benchmark. `generate` writes the seeded inputs
+  * once; `setup` builds the engine-side state the deployment already has
+  * before the timed work (a loaded store, a seeded index or feed). It runs
+  * several times, each from scratch, and the last one is used. `warmup`
+  * runs the workload's own work once, untimed; `timed` measures; `finish`
+  * derives the metrics.
   */
 abstract class Workload(val spark: SparkSession, val tracer: Tracer,
     val jobs: JobCounter, val work: Path, val seed: Long) {
   val out = new Outcome
-  def setup(rep: Int): Unit
+  def generate(): Unit
+  def setup(): Unit
   def warmup(): Unit
   def timed(seconds: Double): Unit
   def finish(): Unit
