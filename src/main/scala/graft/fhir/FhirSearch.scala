@@ -2,7 +2,6 @@ package graft.fhir
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** FHIR search front-end (SURVEY B1–B15): parses a search request string
   * ("Patient?gender=male&_sort=birthdate&_count=10") into a DataFrame plan

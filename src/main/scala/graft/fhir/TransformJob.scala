@@ -1,6 +1,6 @@
 package graft.fhir
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Library-level equivalent of the reference's transform.py CLI
   * (`--input-ndjson IN --output-ndjson OUT [--stop-on-first-error]`):

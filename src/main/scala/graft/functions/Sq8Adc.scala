@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   *
   * Arithmetic is BIT-IDENTICAL to the column form (the gate hashes are
   * load-bearing): dv_i = lo_i + (code_i · (hi_i − lo_i)) / 255.0 in that
-  * exact operation order ([[graft.operators.Similarity]] sq8Decode), all
+  * exact operation order (the SQL replay the sim_*sq8* oracles use), all
   * three sums accumulate in element order (the HOF fold order), and the
   * result is dot / (√Σq² · √Σdv²) — one division, same association. The
   * frozen (lo, hi) bounds ride as flattened reference objects, the

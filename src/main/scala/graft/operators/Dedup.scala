@@ -259,7 +259,7 @@ object Dedup {
     * regime; DedupSpec pins that the capped regime preserves the
     * planted near-superset pairs on the fixture.
     */
-  /** The measured hotCap rule (round-17 ScratchTimingSpec probe,
+  /** The measured hotCap rule (round-17 timing probe,
     * NOTES_r17 §4): a CONSTANT cap silently breaks at scale — cap=32
     * was recall-1.0 at 5 k docs and recall-0.053 at 50 k, because
     * true-containment posting lists grow with the corpus and a cap
@@ -593,9 +593,8 @@ object Dedup {
     * and per-file bsig min/max ranges overlap so footer pruning weakens.
     * Compaction rewrites the bands into ONE bsig-sorted file per band
     * partition and the sets into `setsFiles` files, via staged write +
-    * whole-dir generation swap (the upsertBatch discipline: stage →
-    * park live as `.old` → rename stage in → drop park), so every crash
-    * window leaves a complete generation on disk and
+    * whole-dir generation swap ([[graft.util.IndexStore.compact]]), so
+    * every crash window leaves a complete generation on disk and
     * [[recoverLshIndex]] — called here first, safe to call any time —
     * restores it. Probe results are IDENTICAL before and after: the
     * dedup_lsh_compact gate shares dedup_lsh_append's oracle verbatim.
@@ -604,39 +603,29 @@ object Dedup {
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, setsFiles: Int = 1): Unit =
-    graft.util.Tuning.microBatch(spark) {
-      compactLshIndexBody(spark, path, setsFiles)
-    }
+    graft.util.IndexStore.compact(spark, path, lshStore(setsFiles))
 
-  private def compactLshIndexBody(spark: org.apache.spark.sql.SparkSession,
-      path: String, setsFiles: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverLshIndex(spark, path)
-    val bandsStage = s"$path/_compact_bands"
-    spark.read.parquet(s"$path/bands")
-      .repartition(col("band")).sortWithinPartitions("band", "bsig")
-      .write.mode("overwrite").partitionBy("band").parquet(bandsStage)
-    graft.util.Generations.swapIn(fs, s"$path/bands", bandsStage)
-    val setsStage = s"$path/_compact_sets"
-    spark.read.parquet(s"$path/sets")
-      .repartition(setsFiles).sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(setsStage)
-    graft.util.Generations.swapIn(fs, s"$path/sets", setsStage)
+  /** The LSH index's lifecycle data ([[graft.util.IndexStore]]): one
+    * bsig-sorted file per `band=` dir, and the shingle sets compacted
+    * into `setsFiles` doc_id-sorted files. No quantizer: the hash
+    * geometry is a parameter, never refitted.
+    */
+  private def lshStore(setsFiles: Int) = {
+    val bands: graft.util.IndexStore.Layout = _.repartition(col("band"))
+      .sortWithinPartitions("band", "bsig").write.partitionBy("band")
+    val sets: graft.util.IndexStore.Layout =
+      _.repartition(setsFiles).sortWithinPartitions("doc_id").write
+    graft.util.IndexStore.Kind(Seq("bands" -> bands, "sets" -> sets),
+      meta = None)
   }
 
-  /** Restore a torn [[compactLshIndex]] swap ([[graft.util.Generations]]
-    * recovery over this index's two live dirs). Safe to call any time.
+  /** Restore a torn [[compactLshIndex]] swap
+    * ([[graft.util.IndexStore.recover]] over this index's two live
+    * dirs). Safe to call any time.
     */
   def recoverLshIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.Generations.recover(fs,
-      lives = Seq(s"$path/bands", s"$path/sets"),
-      stages = Seq(s"$path/_compact_bands", s"$path/_compact_sets"))
-  }
+      path: String): Unit =
+    graft.util.IndexStore.recover(spark, path, lshStore(1))
 
   /** Probe a persisted LSH index with a batch of query docs. Two regimes,
     * chosen by the probe batch's distinct band-signature count:
@@ -724,20 +713,7 @@ object Dedup {
     * the short-edit tail (boilerplate with small insertions).
     */
   def editDistanceNearDups(docs: DataFrame, maxDist: Int = 12,
-      prefixLen: Int = 80): DataFrame =
-    edPipeline(docs, maxDist, prefixLen, withDp = true)
-
-  /** Profiling face (ScratchTimingSpec only, not a gate): the IDENTICAL
-    * candidate pipeline with the final Levenshtein-DP conjunct dropped and
-    * `dist` pinned to −1 — isolates candidate enumeration + cheap filters
-    * so full−candidates ≈ DP cost, measurable idle vs contended.
-    */
-  private[operators] def editDistanceCandidates(docs: DataFrame,
-      maxDist: Int = 12, prefixLen: Int = 80): DataFrame =
-    edPipeline(docs, maxDist, prefixLen, withDp = false)
-
-  private def edPipeline(docs: DataFrame, maxDist: Int,
-      prefixLen: Int, withDp: Boolean): DataFrame = {
+      prefixLen: Int = 80): DataFrame = {
     val d = maxDist
     val k = d + 1 // chunk count: the PassJoin pigeonhole
     // Lossless filters stacked cheapest-first; each is a NECESSARY
@@ -826,9 +802,7 @@ object Dedup {
     // for the common far-apart candidate, with values identical to the
     // unbounded DP whenever dist ≤ d (what the ≤ d conjunct keeps).
     // Measured at sf0.1: 6.5-7.5 s → see OPTIMIZATION_r21.md.
-    val fullCond =
-      if (withDp) cheapCond && levenshtein(col("a.s"), col("b.s"), d) >= 0
-      else cheapCond
+    val fullCond = cheapCond && levenshtein(col("a.s"), col("b.s"), d) >= 0
     val viaGrams = chunks.as("a").join(grams.as("b"),
       col("a.glen") === col("b.glen") && col("a.pb") === col("b.pb") &&
         col("a.gram") === col("b.gram") && fullCond)
@@ -840,11 +814,8 @@ object Dedup {
         l1 <= d * 2
     val shorts = keyed.filter(col("len") < k).as("a")
       .join(keyed.filter(col("len") < k + d).as("b"),
-        if (withDp) shortsCond && levenshtein(col("a.s"), col("b.s"), d) >= 0
-        else shortsCond)
-    val dist =
-      if (withDp) levenshtein(col("a.s"), col("b.s"), d).cast(LongType)
-      else lit(-1L)
+        shortsCond && levenshtein(col("a.s"), col("b.s"), d) >= 0)
+    val dist = levenshtein(col("a.s"), col("b.s"), d).cast(LongType)
     Seq(viaGrams, shorts).map {
       _.select(least(col("a.doc_id"), col("b.doc_id")).as("da"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("db"),
@@ -1225,7 +1196,25 @@ object Dedup {
     * the rewrite's own output cost.
     */
   def removeSharedSpans(docs: DataFrame, key: Column, text: Column,
-      n: Int = 8): DataFrame = {
+      n: Int = 8): DataFrame =
+    cutSpans(docs, key, text, n) { p =>
+      val pos = p.cache()
+      graft.util.Scratch.register(pos): Unit // result-reachable; see Scratch
+      val carriers = pos.select(col("doc_key"), col("sh")).distinct()
+        .groupBy("sh").agg(count(lit(1)).as("nd"))
+      pos.join(carriers.filter(col("nd") >= 2), "sh")
+    }
+
+  /** The span-cutting rewrite shared by [[removeSharedSpans]] and
+    * [[Sampling.scrubContaminatedSpans]]: tokenize `docs`, hash every
+    * n-token window by position into a (doc_key, i, sh) frame, let
+    * `covered` pick the windows to cut from it, then cut every token a
+    * picked window covers and reassemble each document from its kept
+    * tokens in position order. Output: (doc_key, n_tokens, n_removed,
+    * cleaned_md5).
+    */
+  private[operators] def cutSpans(docs: DataFrame, key: Column,
+      text: Column, n: Int)(covered: DataFrame => DataFrame): DataFrame = {
     // widened conditionally: tokenization here and the positional
     // shingle hashing below both run at the SCAN's split count on a
     // compact corpus (1-2 splits ⇒ 1-2 cores); no-op at real split
@@ -1239,17 +1228,13 @@ object Dedup {
     // The previous explode(sequence)→slice→array_join→md5 pipeline
     // allocated an n-token string + digest per position — the HOF/
     // per-position-alloc pitfall ngram_hashes already removed from the
-    // LSH path. The hash is internal (the oracle recomputes sharing
+    // LSH path. The hash is internal (an oracle recomputes sharing
     // with its own md5), so only equality classes matter.
     val pos = toks
       .select(col("doc_key"),
         posexplode(call_function("ngram_pos_hashes", col("_text"), lit(n)))
           .as(Seq("p0", "sh")))
       .select(col("doc_key"), (col("p0") + 1).as("i"), col("sh"))
-      .cache()
-    graft.util.Scratch.register(pos): Unit // result-reachable; see Scratch
-    val carriers = pos.select(col("doc_key"), col("sh")).distinct()
-      .groupBy("sh").agg(count(lit(1)).as("nd"))
     // covered SPANS aggregate as one per-doc start-set and expand to
     // positions DOC-LOCALLY after the shuffle (r22, guide §2
     // shuffle-fewer-bytes): the r21 shape exploded every matched span
@@ -1257,13 +1242,12 @@ object Dedup {
     // aggregation's input — and its map-side partial sets — carried up
     // to n× the rows/bytes of the start-set shape (overlapping spans
     // cover mostly-shared positions, but their STARTS are distinct).
-    // The kept text then reassembles doc-locally as before: kept
-    // positions = sequence(1, |w|) minus the covered set via
-    // array_except, which is set-semantic in its second argument — the
-    // flattened expansion needs no distinct, and first-array order (and
-    // with it the cleaned string) is preserved exactly.
-    val covSets = pos
-      .join(carriers.filter(col("nd") >= 2), "sh")
+    // The kept text then reassembles doc-locally: kept positions =
+    // sequence(1, |w|) minus the covered set via array_except, which is
+    // set-semantic in its second argument — the flattened expansion
+    // needs no distinct, and first-array order (and with it the cleaned
+    // string) is preserved exactly.
+    val covSets = covered(pos)
       .groupBy("doc_key")
       .agg(collect_set(col("i")).as("starts"))
       .select(col("doc_key"),

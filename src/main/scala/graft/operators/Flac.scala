@@ -508,7 +508,7 @@ object Flac {
     var at = 0
     while (at < n) {
       val len = math.min(blockSize, n - at)
-      out.write(encodeFrame(pcm, at, len, blockSize, frameNo, sampleRate, channels))
+      out.write(encodeFrame(pcm, at, len, frameNo, sampleRate, channels))
       at += len
       frameNo += 1
     }
@@ -516,7 +516,7 @@ object Flac {
   }
 
   private def encodeFrame(pcm: Array[Array[Int]], at: Int, len: Int,
-      blockSize: Int, frameNo: Long, sampleRate: Int, channels: Int): Array[Byte] = {
+      frameNo: Long, sampleRate: Int, channels: Int): Array[Byte] = {
     val bw = new BitWriter
     bw.writeBits(0x3ffe, 14)
     bw.writeBit(0) // reserved

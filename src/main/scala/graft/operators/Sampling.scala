@@ -226,59 +226,16 @@ object Sampling {
     */
   def scrubContaminatedSpans(train: DataFrame, benchmark: DataFrame,
       key: Column, text: Column, n: Int = 8,
-      benchBroadcastCap: Int = 1 << 22): DataFrame = {
-    // widened conditionally (the removeSharedSpans discipline): the
-    // tokenize + positional-hash maps otherwise run at the scan's split
-    // count on a compact corpus ([[graft.util.Widen]])
-    val toks = graft.util.Scratch.cached(
-      graft.util.Widen.forHeavyMap(train)
-        .select(key.as("doc_key"), text.as("_text"),
-          graft.operators.Dedup.tokens(text).as("w")))
-    val pos = toks
-      .select(col("doc_key"),
-        posexplode(call_function("ngram_pos_hashes", col("_text"), lit(n)))
-          .as(Seq("p0", "sh")))
-      .select(col("doc_key"), (col("p0") + 1).as("i"), col("sh"))
-    val benchSh = benchmark
-      .select(explode(graft.operators.Dedup.shingleHashes(text, n)).as("sh"))
-      .distinct()
-    val small =
-      benchSh.limit(benchBroadcastCap + 1).count() <= benchBroadcastCap
-    val hits =
+      benchBroadcastCap: Int = 1 << 22): DataFrame =
+    graft.operators.Dedup.cutSpans(train, key, text, n) { pos =>
+      val benchSh = benchmark
+        .select(explode(graft.operators.Dedup.shingleHashes(text, n)).as("sh"))
+        .distinct()
+      val small =
+        benchSh.limit(benchBroadcastCap + 1).count() <= benchBroadcastCap
       if (small) pos.join(broadcast(benchSh), "sh")
       else pos.join(benchSh, "sh")
-    // doc-local reassembly (the removeSharedSpans shape): covered span
-    // STARTS aggregate to one per-doc set and expand to positions
-    // DOC-LOCALLY after the shuffle (r22 — the aggregation input no
-    // longer carries n rows per hit), kept positions = sequence(1, |w|)
-    // minus that set (array_except is set-semantic in its second
-    // argument, so the flattened possibly-overlapping expansion needs
-    // no distinct; first-array order ⇒ the cleaned string is
-    // position-ordered exactly as before), tokens looked up by
-    // element_at — shuffles carry only covered span starts, never the
-    // corpus's token rows.
-    val covSets = hits
-      .groupBy("doc_key")
-      .agg(collect_set(col("i")).as("starts"))
-      .select(col("doc_key"),
-        flatten(transform(col("starts"),
-          s => sequence(s, s + (n - 1)))).as("cov"))
-    toks.join(covSets, Seq("doc_key"), "left")
-      .select(col("doc_key"), col("w"),
-        coalesce(col("cov"), array().cast("array<int>")).as("cov"))
-      .select(col("doc_key"),
-        size(col("w")).cast("long").as("n_tokens"),
-        transform(
-          array_except(
-            // sequence(1, 0) would count DOWN on a zero-token doc
-            when(size(col("w")) >= 1, sequence(lit(1), size(col("w"))))
-              .otherwise(array().cast("array<int>")),
-            col("cov")),
-          p => element_at(col("w"), p)).as("keptw"))
-      .select(col("doc_key"), col("n_tokens"),
-        (col("n_tokens") - size(col("keptw")).cast("long")).as("n_removed"),
-        md5(array_join(col("keptw"), " ")).as("cleaned_md5"))
-  }
+    }
 
   /** SEMANTIC decontamination — the embedding-level sibling of
     * [[decontaminate]]: flag training vectors whose max cosine against

@@ -269,10 +269,8 @@ object Similarity {
     assigned.write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/cells")
     val spark = assigned.sparkSession
-    val json = centersOf(cents)
-      .map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
     graft.util.MetaJson.write(fsOf(spark, path), s"$path/centroids",
-      "centroids", json)
+      "centroids", centersJson(centersOf(cents)))
   }
 
   /** Hadoop FileSystem of `path` under this session's configuration. */
@@ -336,39 +334,39 @@ object Similarity {
       newVecs: DataFrame, batchId: Long): Boolean =
     graft.util.CommittedAppend.run(spark, path, batchId) { stage =>
       val centers = centersOf(readIvfCentroids(spark, path))
-      newVecs.select(col("vec_id"), col("embedding"))
-        .withColumn("cell",
-          element_at(assignCells(centers, nassign = 1, euclid = true), 1))
-        .repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$stage/cells")
+      cellLayout(newVecs.select(col("vec_id"), col("embedding"))
+          .withColumn("cell",
+            element_at(assignCells(centers, nassign = 1, euclid = true), 1)))
+        .mode("overwrite").parquet(s"$stage/cells")
     }
+
+  /** The staged layout of an IVF `cells/` tree: one vec_id-sorted file
+    * per `cell=` dir.
+    */
+  private val cellLayout: graft.util.IndexStore.Layout =
+    _.repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
+      .write.partitionBy("cell")
+
+  /** The IVF index's lifecycle data ([[graft.util.IndexStore]]): the
+    * celled corpus and its centroids.
+    */
+  private val ivfStore = graft.util.IndexStore.Kind(
+    Seq("cells" -> cellLayout), meta = Some("centroids"))
 
   /** Compact a persisted IVF index in place — the maintenance step after
     * many committed appends, where each cell= dir holds one file per
     * batch: probes stay correct but the probed-cell scan pays
     * file-count overhead (listing, open, a tiny row group per file).
     * Rewrites each cell into ONE vec_id-sorted file via staged write +
-    * crash-recoverable generation swap ([[graft.util.Generations]] —
-    * [[recoverIvfIndex]] restores any torn swap and runs first). Probe
+    * crash-recoverable generation swap ([[graft.util.IndexStore.compact]]
+    * — [[recoverIvfIndex]] restores any torn swap and runs first). Probe
     * results are IDENTICAL before and after: the sim_ivf_compact gate
     * shares sim_ivf_append's oracle verbatim. Single-maintainer
     * contract: do not run concurrently with appends. Frozen centroids
     * are untouched (metadata, not part of the rewrite).
     */
   def compactIvfIndex(spark: SparkSession, path: String): Unit =
-    graft.util.Tuning.microBatch(spark) { compactIvfIndexBody(spark, path) }
-
-  private def compactIvfIndexBody(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverIvfIndex(spark, path)
-    val stage = s"$path/_compact_cells"
-    spark.read.parquet(s"$path/cells")
-      .repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(stage)
-    graft.util.Generations.swapIn(fs, s"$path/cells", stage)
-  }
+    graft.util.IndexStore.compact(spark, path, ivfStore)
 
   /** REFIT a persisted IVF index's coarse quantizer in place — the
     * maintenance pass that answers quantizer DRIFT, the one failure mode
@@ -379,16 +377,9 @@ object Similarity {
     * full-corpus distributed Lloyd, not the driver-sample quantizer —
     * the index has outgrown a sample by the time drift matters) →
     * reassign every vector → swap BOTH generations (cells/ and
-    * centroids/) via the [[graft.util.Generations]] discipline.
-    *
-    * Crash safety across the TWO-directory swap: both stages are written
-    * completely BEFORE the first swap, cells swap first, centroids
-    * second, and [[recoverIvfIndex]] decides direction from what
-    * survives — a cells stage still present means no swap completed
-    * (roll BACK: restore parked generations, drop stages); a centroids
-    * stage present with the cells stage gone means the cells swap
-    * committed (roll FORWARD: complete the centroids swap) — so no crash
-    * window can leave new cells probed by old centroids. Equivalent to a
+    * centroids/), cells first, by [[graft.util.IndexStore.refit]]'s
+    * direction-decidable two-directory discipline, so no crash window
+    * can leave new cells probed by old centroids. Equivalent to a
     * fresh [[writeIvfIndex]]([[kmeansFit]](grown corpus)) — the
     * sim_ivf_refit gate hash-checks exactly that. Single-maintainer
     * contract; refuses while a committed append is in flight.
@@ -400,140 +391,30 @@ object Similarity {
   /** [[refitIvfIndex]] that TOLERATES CONCURRENT committed appends — the
     * operator a continuously-ingesting deployment actually runs
     * (stream_ivf_append / stream_semantic_admission never leave a
-    * stop-the-world refit window). Refit-under-ingest, in phases:
-    *
-    *  1. SNAPSHOT: list the live data files under `cells/` — the refit
-    *     generation is defined by this file set, not by the directory,
-    *     so appends landing later never leak into the quantizer fit.
-    *  2. FIT (long, unfenced): [[kmeansFit]] over the snapshot corpus;
-    *     stage the reassigned cells and new centroids. Concurrent
-    *     committed appends land freely in the live tree meanwhile.
-    *  3. FENCE (short): raise the [[graft.util.CommittedAppend]]
-    *     maintenance fence — from here until the swap commits, a
-    *     committed append refuses at staging AND at promotion (an
-    *     at-least-once scheduler just retries after). Wait out
-    *     in-flight stagings (assertNoInflight — if one is mid-promote,
-    *     refuse and retry the refit later; the finally drops the
-    *     fence).
-    *  4. DELTA: files now under `cells/` minus the snapshot = batches
-    *     that committed DURING the fit. Re-assign exactly those rows
-    *     under the NEW centroids (one bounded job — delta-sized, not
-    *     corpus-sized) and append them to the staged cells, so the new
-    *     generation carries every vector the old one did.
-    *  5. SWAP cells then centroids (the [[recoverIvfIndex]]
-    *     direction-decidable two-directory discipline), drop the fence.
-    *
-    * The ingest-blocked window is delta-reassign + two renames — NOT
-    * the quantizer fit. Result is hash-equivalent to a fresh
-    * assign-everything under kmeansFit(snapshot): the snapshot rows get
-    * kmeansFit's own final assignment, the delta rows the identical
-    * [[assignCells]] argmin under the same final centroids (the
-    * sim_ivf_refit_live gate replays exactly that in SQL).
+    * stop-the-world refit window): the quantizer fit runs over a
+    * file-set snapshot of `cells/`, unfenced; batches that commit during
+    * it are re-assigned under the NEW centroids inside the short fenced
+    * window ([[graft.util.IndexStore.refit]]). Result is hash-equivalent
+    * to a fresh assign-everything under kmeansFit(snapshot): every row
+    * gets the identical [[assignCells]] argmin under the same final
+    * centroids (the sim_ivf_refit_live gate replays exactly that in SQL).
     *
     * `afterFit` is a test seam: it runs between staging and the fence,
     * where concurrent appends are most interesting to interleave.
     */
   def refitIvfIndexLive(spark: SparkSession, path: String, ncells: Int,
       iters: Int = 2, afterFit: () => Unit = () => ()): Unit =
-    // maintenance pass with fixed plans: the per-iteration Lloyd mean is
-    // a k·dims-bounded shuffle and the staged writes use explicit
-    // repartition(col(cell)) (a required distribution AQE leaves alone) —
-    // AQE's per-exchange materialization jobs only add driver latency
-    // per iteration ([[graft.util.Tuning.microBatch]])
-    graft.util.Tuning.microBatch(spark) {
-      refitIvfIndexLiveBody(spark, path, ncells, iters, afterFit)
+    graft.util.IndexStore.refit(spark, path, ivfStore, s"$path/cells",
+        delta = cellLayout, afterFit) { corpus =>
+      val centers = centersOf(kmeansFit(corpus, ncells, iters)._2)
+      (_.withColumn("cell",
+          element_at(assignCells(centers, nassign = 1, euclid = true), 1)),
+        centersJson(centers))
     }
 
-  private def refitIvfIndexLiveBody(spark: SparkSession, path: String,
-      ncells: Int, iters: Int, afterFit: () => Unit): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverIvfIndex(spark, path)
-    def liveFiles(): Set[String] = listDataFiles(fs, s"$path/cells")
-    val snapshot = liveFiles()
-    require(snapshot.nonEmpty, s"refit of an empty index: $path/cells")
-    // explicit-path read: the fit NEVER sees files appended after the
-    // snapshot, even though they share the directory
-    val corpus = spark.read.parquet(snapshot.toSeq.sorted: _*)
-      .select(col("vec_id"), col("embedding"))
-    val (assigned, cents) = kmeansFit(corpus, ncells, iters)
-    val cellsStage = s"$path/_refit_cells"
-    val centStage = s"$path/_refit_centroids"
-    // stage EVERYTHING first (the staged cells read the live tree, so
-    // both writes must complete before any swap), swap second
-    assigned.select(col("vec_id"), col("embedding"), col("cell"))
-      .repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(cellsStage)
-    val json = centersOf(cents)
-      .map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
-    graft.util.MetaJson.write(fs, centStage, "centroids", json)
-    afterFit()
-    val fenceToken = graft.util.CommittedAppend.raiseFence(fs, path)
-    try {
-      graft.util.CommittedAppend.assertNoInflight(fs, path)
-      val delta = (liveFiles() -- snapshot).toSeq.sorted
-      if (delta.nonEmpty) {
-        val centers = centersOf(cents)
-        spark.read.parquet(delta: _*)
-          .select(col("vec_id"), col("embedding"))
-          .withColumn("cell",
-            element_at(assignCells(centers, nassign = 1, euclid = true), 1))
-          .repartition(col("cell")).sortWithinPartitions("cell", "vec_id")
-          .write.mode("append").partitionBy("cell").parquet(cellsStage)
-      }
-      assertFenceHeld(fs, path, fenceToken)
-      graft.util.Generations.swapIn(fs, s"$path/cells", cellsStage)
-      // re-assert between the swaps: a mis-invoked recovery can drop
-      // the fence after the first check — cheap, and it shrinks the
-      // unprotected window to one rename
-      assertFenceHeld(fs, path, fenceToken)
-      graft.util.Generations.swapIn(fs, s"$path/centroids", centStage)
-    } finally graft.util.CommittedAppend.dropFenceOwned(fs, path, fenceToken)
-  }
-
-  /** Scheme-normalized path string ("file:///x" and "file:/x" spell the
-    * same file) — DataFrame.inputFiles and Hadoop listings disagree on
-    * the spelling, and a snapshot diff across the two must not invent a
-    * phantom delta.
-    */
-  private def normalizePath(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  /** Recursive listing of the live data files under `dir` — the FILE-SET
-    * SNAPSHOT that defines a refit generation (appends landing later
-    * share the directory but never the snapshot).
-    */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      dir: String): Set[String] = {
-    val out = Set.newBuilder[String]
-    val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-    while (it.hasNext) {
-      val f = it.next().getPath
-      if (f.getName.endsWith(".parquet") && !f.getName.startsWith("_")
-          && !f.getName.startsWith("."))
-        out += f.toString
-    }
-    out.result()
-  }
-
-  /** The refit-holder's LAST check before a generation swap: the fence
-    * must still be up AND carry OUR token. A concurrently mis-invoked
-    * recovery ([[recoverIvfIndex]] is documented single-maintainer, but
-    * "safe to call any time" invites it) may have dropped the fence —
-    * and committed appends may then have promoted into the live
-    * generation this swap is about to PARK. Aborting here turns that
-    * silent lost-batch window into a loud retry; the delta those appends
-    * represent is picked up by the rerun's snapshot.
-    */
-  private def assertFenceHeld(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, token: String): Unit =
-    if (!graft.util.CommittedAppend.fenceToken(fs, path).contains(token))
-      throw new IllegalStateException(
-        s"$path: maintenance fence was dropped (or re-raised by another " +
-          "maintainer) during the refit window — committed appends may " +
-          "have promoted into the generation this swap would park; " +
-          "aborting the swap. Re-run the refit (its snapshot will " +
-          "include the landed batches)")
+  /** The centroid metadata record: `[[c0…],[c1…],…]` in cell order. */
+  private def centersJson(centers: Array[Array[Double]]): String =
+    centers.map(_.mkString("[", ",", "]")).mkString("[", ",", "]")
 
   /** Cell-balance statistics of a persisted IVF index — the DRIFT
     * SIGNAL that tells a deployment WHEN [[refitIvfIndex]] pays: under
@@ -562,46 +443,14 @@ object Similarity {
   }
 
   /** Restore a torn [[compactIvfIndex]] swap or a torn [[refitIvfIndex]]
-    * two-directory swap. Safe to call any time; run first by both.
-    * Refit windows are direction-decidable: the cells stage still
-    * present ⇒ no swap committed ⇒ roll back; only the centroids stage
-    * present ⇒ the cells swap committed ⇒ roll the centroids swap
-    * FORWARD (old centroids must never probe new cells).
+    * two-directory swap ([[graft.util.IndexStore.recover]]). Safe to call
+    * any time; run first by both. Refit windows are direction-decidable:
+    * the cells stage still present ⇒ no swap committed ⇒ roll back; only
+    * the centroids stage present ⇒ the cells swap committed ⇒ roll the
+    * centroids swap FORWARD (old centroids must never probe new cells).
     */
-  def recoverIvfIndex(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crash inside the fenced window leaves the maintenance fence up
-    // and would refuse ingest forever — recovery owns dropping it (the
-    // swap itself is restored below, so the fence has nothing to guard).
-    // A LIVE refit that loses its fence to a mis-sequenced concurrent
-    // recovery is protected by its own owner-token checks immediately
-    // before EACH swap, which NARROW the lost-batch window this
-    // unconditional drop opens to the check→rename instants (full
-    // closure would need an atomic compare-and-rename the filesystem
-    // API does not offer; the single-maintainer contract is what makes
-    // the residue acceptable).
-    graft.util.CommittedAppend.dropFence(fs, path)
-    val cellsStage = s"$path/_refit_cells"
-    val centStage = s"$path/_refit_centroids"
-    if (fs.exists(new org.apache.hadoop.fs.Path(cellsStage)))
-      // crash before (or during) the cells swap: the parked generations
-      // (if any) are the consistent pair — restore them, drop both stages
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/cells", s"$path/centroids"),
-        stages = Seq(cellsStage, centStage))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(centStage))) {
-      // cells swap committed, centroids swap pending: heal any torn
-      // centroids rename, then complete the swap
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/cells", s"$path/centroids"), stages = Seq())
-      graft.util.Generations.swapIn(fs, s"$path/centroids", centStage)
-    } else
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/cells", s"$path/centroids"), stages = Seq())
-    graft.util.Generations.recover(fs, lives = Seq(s"$path/cells"),
-      stages = Seq(s"$path/_compact_cells"))
-  }
+  def recoverIvfIndex(spark: SparkSession, path: String): Unit =
+    graft.util.IndexStore.recover(spark, path, ivfStore)
 
   /** `nassign` nearest cells per embedding, nearest first, as a native
     * fused-loop column ([[graft.functions.IvfAssignExpr]]).
@@ -1180,11 +1029,8 @@ object Similarity {
   def writePqIndex(corpus: DataFrame, cb: Array[Array[Array[Double]]],
       path: String): Unit = {
     pqEncode(corpus, cb).write.mode("overwrite").parquet(s"$path/codes")
-    val json = cb.map(_.map(_.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")).mkString("[", ",", "]")
-    val spark = corpus.sparkSession
-    graft.util.MetaJson.write(fsOf(spark, path), s"$path/codebook",
-      "codebook", json)
+    graft.util.MetaJson.write(fsOf(corpus.sparkSession, path),
+      s"$path/codebook", "codebook", codebookJson(cb))
   }
 
   /** Append new vectors to a persisted PQ index under its FROZEN
@@ -1222,41 +1068,41 @@ object Similarity {
     */
   def appendToPqIndexCommitted(spark: SparkSession, path: String,
       newVecs: DataFrame, batchId: Long, outFiles: Int = 0): Boolean =
-    graft.util.CommittedAppend.run(spark, path, batchId) { stage =>
-      val (_, cb) = readPqIndex(spark, path)
-      // cache before the adaptive-width count: the batch may be a derived
-      // plan, and the count should fill the cache the encode consumes,
-      // not add a second execution of it
-      val vecs = newVecs.select(col("vec_id"), col("embedding")).cache()
-      try {
-        val n = if (outFiles > 0) outFiles
-          else graft.util.CommittedAppend.outFilesFor(spark, vecs.count())
-        graft.util.CommittedAppend.stagedSlices(
-            pqEncode(vecs, cb), n, col("vec_id"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("overwrite").parquet(s"$stage/codes")
-      } finally { vecs.unpersist(); () }
+    graft.util.IndexStore.appendCommitted(spark, path, pqStore(1), newVecs,
+        batchId, outFiles) { vecs =>
+      pqEncode(vecs, readPqIndex(spark, path)._2)
     }
 
+  /** A code table's staged layout: `files` vec_id-sorted files. */
+  private def byVecId(files: Int): graft.util.IndexStore.Layout =
+    _.repartition(files).sortWithinPartitions("vec_id").write
+
+  /** A refit delta's staged layout: the fenced window's cost IS the
+    * delta encode, so it range-partitions across the cores (sorted
+    * multi-file layout, the committed append's policy) instead of
+    * running as ONE task.
+    */
+  private def deltaByVecId(spark: SparkSession): graft.util.IndexStore.Layout =
+    _.repartitionByRange(spark.sessionState.conf.numShufflePartitions,
+        col("vec_id"))
+      .sortWithinPartitions("vec_id").write
+
+  /** The PQ index's lifecycle data ([[graft.util.IndexStore]]): the code
+    * table, compacted into `files` files, and its codebook.
+    */
+  private def pqStore(files: Int) = graft.util.IndexStore.Kind(
+    Seq("codes" -> byVecId(files)), meta = Some("codebook"))
+
   /** Compact a persisted PQ index's code table into `files` vec_id-
-    * sorted files via the shared crash-recoverable generation swap —
-    * the PQ sibling of [[compactSq8Index]]. Codebook metadata is
+    * sorted files via the shared crash-recoverable generation swap
+    * ([[graft.util.IndexStore.compact]]). Codebook metadata is
     * untouched (not part of the rewrite). Single-maintainer contract
     * as with every compactor; refuses while a committed append is in
     * flight.
     */
   def compactPqIndex(spark: SparkSession, path: String,
-      files: Int = 1): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverPqIndex(spark, path)
-    val stage = s"$path/_compact_codes"
-    spark.read.parquet(s"$path/codes")
-      .repartition(files).sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(stage)
-    graft.util.Generations.swapIn(fs, s"$path/codes", stage)
-  }
+      files: Int = 1): Unit =
+    graft.util.IndexStore.compact(spark, path, pqStore(files))
 
   /** REFIT a persisted PQ index's codebooks — the maintenance pass for
     * quantizer drift, possible exactly when the PQ index sits BESIDE an
@@ -1266,120 +1112,41 @@ object Similarity {
     * `cells/` IS the vector store. Retrains [[pqCodebooks]] on the
     * celled corpus (grown through however many committed appends),
     * re-encodes EVERY vector under the new codebooks, and swaps codes
-    * then codebook via the [[refitIvfIndexLive]] two-directory
-    * discipline — both stages written before either swap,
-    * [[recoverPqIndex]] decides direction from which stage survives, so
-    * no torn window is unrecoverable. Without co-located vectors the
-    * refit refuses loudly (the codes cannot be decoded back into
-    * training data). Equivalent to a fresh
+    * then codebook by [[graft.util.IndexStore.refit]]'s ingest-tolerant,
+    * direction-decidable discipline: vector files that commit during
+    * the retrain are re-encoded under the new codebooks inside the
+    * fenced window, so none is silently erased at the swap. Without
+    * co-located vectors the refit refuses loudly (the codes cannot be
+    * decoded back into training data). Equivalent to a fresh
     * [[writePqIndex]]([[pqCodebooks]](celled corpus)) — SimilaritySpec
     * pins refit == fresh-encode on codes AND codebook.
-    *
-    * Ingest-tolerant, the [[refitIvfIndexLive]] discipline: the corpus
-    * is a FILE-SET SNAPSHOT of the vector store, the long retrain +
-    * re-encode runs unfenced, then the maintenance fence goes up for a
-    * short window — re-assert no in-flight stagings, re-encode the
-    * DELTA (vector files that committed during the retrain) under the
-    * new codebooks into the staged codes, verify fence ownership, swap
-    * codes then codebook. Without the fence+delta, a committed append
-    * promoting into `codes/` during the retrain would be silently
-    * erased at swapIn — its `_committed` marker making the retry a
-    * no-op, the vectors present in `cells/` but permanently absent from
-    * `codes/`.
     */
   def refitPqIndex(spark: SparkSession, path: String, m: Int = 8,
       kcodes: Int = 16, seed: Long = 42L, sampleCap: Int = 4096,
       iters: Int = 20, files: Int = 1,
       vectorsDir: Option[String] = None,
-      afterFit: () => Unit = () => ()): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverPqIndex(spark, path)
-    val src = vectorsDir.getOrElse(s"$path/cells")
-    require(fs.exists(new org.apache.hadoop.fs.Path(src)),
-      s"PQ refit needs the raw vectors (codes are lossy) — no celled " +
-        s"vector store at $src; co-locate the PQ index with an IVF " +
-        "layout or pass vectorsDir")
-    // snapshot = the exact file set behind THIS directory read (its
-    // cached FileIndex) — race-free, and the fit reads through the
-    // directory exactly like a fresh writePqIndex would, so the
-    // order-sensitive sample (pqCodebooks' limit) stays bit-equal to the
-    // refit==fresh-encode contract the gates pin
-    val corpusDf = spark.read.parquet(src)
-    val snapshot = corpusDf.inputFiles.map(normalizePath).toSet
-    require(snapshot.nonEmpty, s"PQ refit of an empty vector store: $src")
-    val corpus = corpusDf.select(col("vec_id"), col("embedding"))
-    val cb = pqCodebooks(corpus, m, kcodes, seed, sampleCap, iters)
-    val codesStage = s"$path/_refit_codes"
-    val cbStage = s"$path/_refit_codebook"
-    pqEncode(corpus, cb)
-      .repartition(files).sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(codesStage)
-    val json = cb.map(_.map(_.mkString("[", ",", "]"))
-        .mkString("[", ",", "]")).mkString("[", ",", "]")
-    graft.util.MetaJson.write(fs, cbStage, "codebook", json)
-    afterFit()
-    val fenceToken = graft.util.CommittedAppend.raiseFence(fs, path)
-    try {
-      graft.util.CommittedAppend.assertNoInflight(fs, path)
-      // set-difference on NORMALIZED paths (the snapshot came from the
-      // DataFrame's inputFiles, whose URI spelling differs from the fs
-      // listing), but READ via the fs listing's full URIs — a stripped
-      // path would resolve against fs.defaultFS and miss a scheme-
-      // qualified or non-default-authority index root
-      val delta = listDataFiles(fs, src).toSeq
-        .filter(f => !snapshot.contains(normalizePath(f))).sorted
-      if (delta.nonEmpty)
-        pqEncode(spark.read.parquet(delta: _*)
-            .select(col("vec_id"), col("embedding")), cb)
-          // the fenced window's cost IS this encode: range-partition it
-          // across the cores (sorted multi-file layout, same policy as
-          // the committed append) instead of ONE task
-          .repartitionByRange(
-            spark.sessionState.conf.numShufflePartitions, col("vec_id"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("append").parquet(codesStage)
-      assertFenceHeld(fs, path, fenceToken)
-      graft.util.Generations.swapIn(fs, s"$path/codes", codesStage)
-      assertFenceHeld(fs, path, fenceToken) // between-swap re-assert
-      graft.util.Generations.swapIn(fs, s"$path/codebook", cbStage)
-    } finally graft.util.CommittedAppend.dropFenceOwned(fs, path, fenceToken)
-  }
+      afterFit: () => Unit = () => ()): Unit =
+    graft.util.IndexStore.refit(spark, path, pqStore(files),
+        vectorsDir.getOrElse(s"$path/cells"), deltaByVecId(spark),
+        afterFit) { corpus =>
+      val cb = pqCodebooks(corpus, m, kcodes, seed, sampleCap, iters)
+      (pqEncode(_, cb), codebookJson(cb))
+    }
+
+  /** The codebook metadata record: nested `[[[…]]]` arrays. */
+  private def codebookJson(cb: Array[Array[Array[Double]]]): String =
+    cb.map(_.map(_.mkString("[", ",", "]"))
+      .mkString("[", ",", "]")).mkString("[", ",", "]")
 
   /** Restore a torn [[compactPqIndex]] swap or a torn [[refitPqIndex]]
-    * two-directory swap — the "safe to call any time" recovery entry
-    * point every compactor exposes ([[recoverIvfIndex]],
-    * [[recoverSq8Index]], [[Dedup.recoverLshIndex]]). Run first by
-    * both. Refit windows are direction-decidable, the
-    * [[recoverIvfIndex]] discipline: the codes stage still present ⇒ no
-    * swap committed ⇒ roll back; only the codebook stage present ⇒ the
-    * codes swap committed ⇒ roll the codebook swap FORWARD (old
+    * two-directory swap ([[graft.util.IndexStore.recover]]) — the "safe
+    * to call any time" recovery entry point every compactor exposes. Run
+    * first by both. The codes stage still present ⇒ roll back; only the
+    * codebook stage present ⇒ roll the codebook swap FORWARD (old
     * codebooks must never decode new codes).
     */
-  def recoverPqIndex(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a crash inside the refit's fenced window leaves the fence up and
-    // would refuse ingest forever — recovery drops it (a LIVE holder is
-    // protected by its own pre-swap assertFenceHeld owner-token check)
-    graft.util.CommittedAppend.dropFence(fs, path)
-    val codesStage = s"$path/_refit_codes"
-    val cbStage = s"$path/_refit_codebook"
-    if (fs.exists(new org.apache.hadoop.fs.Path(codesStage)))
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/codebook"),
-        stages = Seq(codesStage, cbStage))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(cbStage))) {
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/codebook"), stages = Seq())
-      graft.util.Generations.swapIn(fs, s"$path/codebook", cbStage)
-    } else
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/codebook"), stages = Seq())
-    graft.util.Generations.recover(fs, lives = Seq(s"$path/codes"),
-      stages = Seq(s"$path/_compact_codes"))
-  }
+  def recoverPqIndex(spark: SparkSession, path: String): Unit =
+    graft.util.IndexStore.recover(spark, path, pqStore(1))
 
   def readPqIndex(spark: SparkSession, path: String): (DataFrame, Array[Array[Array[Double]]]) = {
     val codes = spark.read.parquet(s"$path/codes")
@@ -1505,37 +1272,26 @@ object Similarity {
     */
   def appendToSq8IndexCommitted(spark: SparkSession, path: String,
       newVecs: DataFrame, batchId: Long, outFiles: Int = 0): Boolean =
-    graft.util.CommittedAppend.run(spark, path, batchId) { stage =>
+    graft.util.IndexStore.appendCommitted(spark, path, sq8Store(1), newVecs,
+        batchId, outFiles) { vecs =>
       val (_, lo, hi) = readSq8Index(spark, path)
-      // cache-then-count, the appendToPqIndexCommitted discipline
-      val vecs = newVecs.select(col("vec_id"), col("embedding")).cache()
-      try {
-        val n = if (outFiles > 0) outFiles
-          else graft.util.CommittedAppend.outFilesFor(spark, vecs.count())
-        graft.util.CommittedAppend.stagedSlices(
-            sq8Encode(vecs, lo, hi), n, col("vec_id"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("overwrite").parquet(s"$stage/codes")
-      } finally { vecs.unpersist(); () }
+      sq8Encode(vecs, lo, hi)
     }
 
+  /** The SQ8 index's lifecycle data ([[graft.util.IndexStore]]): the
+    * code table, compacted into `files` files, and its (lo, hi) bounds.
+    */
+  private def sq8Store(files: Int) = graft.util.IndexStore.Kind(
+    Seq("codes" -> byVecId(files)), meta = Some("bounds"))
+
   /** Compact a persisted SQ8 index's code table into `files` vec_id-
-    * sorted files via the shared crash-recoverable generation swap —
-    * the flat-layout sibling of [[compactIvfIndex]]. Bounds metadata is
-    * untouched. Single-maintainer contract as with every compactor.
+    * sorted files via the shared crash-recoverable generation swap
+    * ([[graft.util.IndexStore.compact]]). Bounds metadata is untouched.
+    * Single-maintainer contract as with every compactor.
     */
   def compactSq8Index(spark: SparkSession, path: String,
-      files: Int = 1): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverSq8Index(spark, path)
-    val stage = s"$path/_compact_codes"
-    spark.read.parquet(s"$path/codes")
-      .repartition(files).sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(stage)
-    graft.util.Generations.swapIn(fs, s"$path/codes", stage)
-  }
+      files: Int = 1): Unit =
+    graft.util.IndexStore.compact(spark, path, sq8Store(files))
 
   /** REFIT a persisted SQ8 index's (lo, hi) bounds — the drift repair
     * for the third quantizer family, closing the refit column of the
@@ -1546,110 +1302,36 @@ object Similarity {
     * raw vectors (`cells/` of an IVF layout sharing the index root —
     * SQ8 codes, like PQ codes, are lossy: refit NEEDS the vectors, and
     * refuses loudly without them), re-encode everything, and swap codes
-    * then bounds via the [[refitPqIndex]] direction-decidable
-    * discipline. Equivalent to a fresh [[writeSq8Index]] over the
-    * celled corpus — the sim_sq8_refit gate hash-checks exactly that in
-    * the pure-ADC regime, where stale saturated codes would move the
-    * scores.
-    *
-    * Ingest-tolerant like [[refitPqIndex]]: snapshot the vector files,
-    * retrain/re-encode unfenced, then fence → re-assert no in-flight →
-    * delta-re-encode vectors that committed during the retrain → verify
-    * fence ownership → swap codes then bounds.
+    * then bounds by [[graft.util.IndexStore.refit]]'s ingest-tolerant,
+    * direction-decidable discipline. Equivalent to a fresh
+    * [[writeSq8Index]] over the celled corpus — the sim_sq8_refit gate
+    * hash-checks exactly that in the pure-ADC regime, where stale
+    * saturated codes would move the scores.
     */
   def refitSq8Index(spark: SparkSession, path: String, files: Int = 1,
       vectorsDir: Option[String] = None,
-      afterFit: () => Unit = () => ()): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.util.CommittedAppend.assertNoInflight(fs, path)
-    recoverSq8Index(spark, path)
-    val src = vectorsDir.getOrElse(s"$path/cells")
-    require(fs.exists(new org.apache.hadoop.fs.Path(src)),
-      s"SQ8 refit needs the raw vectors (codes are lossy) — no celled " +
-        s"vector store at $src; co-locate the SQ8 index with an IVF " +
-        "layout or pass vectorsDir")
-    val snapshot = listDataFiles(fs, src)
-    require(snapshot.nonEmpty, s"SQ8 refit of an empty vector store: $src")
-    val corpus = spark.read.parquet(snapshot.toSeq.sorted: _*)
-      .select(col("vec_id"), col("embedding"))
-    val (lo, hi) = sq8Stats(corpus)
-    val codesStage = s"$path/_refit_codes"
-    val bndStage = s"$path/_refit_bounds"
-    sq8Encode(corpus, lo, hi)
-      .repartition(files).sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(codesStage)
-    graft.util.MetaJson.write(fs, bndStage, "bounds",
-      lo.mkString("[", ",", "]") + "|" + hi.mkString("[", ",", "]"))
-    afterFit()
-    val fenceToken = graft.util.CommittedAppend.raiseFence(fs, path)
-    try {
-      graft.util.CommittedAppend.assertNoInflight(fs, path)
-      val delta = (listDataFiles(fs, src) -- snapshot).toSeq.sorted
-      if (delta.nonEmpty)
-        sq8Encode(spark.read.parquet(delta: _*)
-            .select(col("vec_id"), col("embedding")), lo, hi)
-          // parallel fenced-window encode, the refitPqIndex policy
-          .repartitionByRange(
-            spark.sessionState.conf.numShufflePartitions, col("vec_id"))
-          .sortWithinPartitions("vec_id")
-          .write.mode("append").parquet(codesStage)
-      assertFenceHeld(fs, path, fenceToken)
-      graft.util.Generations.swapIn(fs, s"$path/codes", codesStage)
-      assertFenceHeld(fs, path, fenceToken) // between-swap re-assert
-      graft.util.Generations.swapIn(fs, s"$path/bounds", bndStage)
-    } finally graft.util.CommittedAppend.dropFenceOwned(fs, path, fenceToken)
-  }
+      afterFit: () => Unit = () => ()): Unit =
+    graft.util.IndexStore.refit(spark, path, sq8Store(files),
+        vectorsDir.getOrElse(s"$path/cells"), deltaByVecId(spark),
+        afterFit) { corpus =>
+      val (lo, hi) = sq8Stats(corpus)
+      (sq8Encode(_, lo, hi), boundsJson(lo, hi))
+    }
+
+  /** The bounds metadata record: `[lo…]|[hi…]`. */
+  private def boundsJson(lo: Array[Double], hi: Array[Double]): String =
+    lo.mkString("[", ",", "]") + "|" + hi.mkString("[", ",", "]")
 
   /** Restore a torn [[compactSq8Index]] swap or a torn [[refitSq8Index]]
-    * two-directory swap — the documented "safe to call any time"
-    * recovery entry point every compactor exposes
-    * ([[recoverIvfIndex]], [[Dedup.recoverLshIndex]]): without it a
-    * torn swap leaves `codes/` parked as `codes.old` and every
+    * two-directory swap ([[graft.util.IndexStore.recover]]) — without it
+    * a torn swap leaves `codes/` parked as `codes.old` and every
     * [[readSq8Index]]/probe fails until the NEXT compaction happens to
     * run its inline recovery. Run first by [[compactSq8Index]] and
-    * [[refitSq8Index]]. Refit windows are direction-decidable (the
-    * [[recoverIvfIndex]] discipline): codes stage present ⇒ roll back;
-    * only the bounds stage ⇒ roll FORWARD (old bounds must never
-    * decode new codes).
+    * [[refitSq8Index]]. Codes stage present ⇒ roll back; only the bounds
+    * stage ⇒ roll FORWARD (old bounds must never decode new codes).
     */
-  def recoverSq8Index(spark: SparkSession, path: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // same fence ownership discipline as recoverIvfIndex/recoverPqIndex
-    graft.util.CommittedAppend.dropFence(fs, path)
-    val codesStage = s"$path/_refit_codes"
-    val bndStage = s"$path/_refit_bounds"
-    if (fs.exists(new org.apache.hadoop.fs.Path(codesStage)))
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/bounds"),
-        stages = Seq(codesStage, bndStage))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(bndStage))) {
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/bounds"), stages = Seq())
-      graft.util.Generations.swapIn(fs, s"$path/bounds", bndStage)
-    } else
-      graft.util.Generations.recover(fs,
-        lives = Seq(s"$path/codes", s"$path/bounds"), stages = Seq())
-    graft.util.Generations.recover(fs, lives = Seq(s"$path/codes"),
-      stages = Seq(s"$path/_compact_codes"))
-  }
-
-  /** The decoded (reconstructed) vector of a codes column:
-    * d_i = lo_i + code_i · (hi_i − lo_i) / 255. Exact affine arithmetic
-    * in a fixed order — the replayable core of the SQ8 ranking. Kept as
-    * the readable spec of the decode; the HOT path (the ADC scan) uses
-    * [[sq8AdcCosine]], which fuses decode + cosine into one codegen'd
-    * loop with bit-identical arithmetic.
-    */
-  private def sq8Decode(codes: Column, lo: Array[Double],
-      hi: Array[Double]): Column = {
-    val loL = typedLit(lo); val hiL = typedLit(hi)
-    transform(codes, (c, i) => {
-      val l = element_at(loL, i + 1); val h = element_at(hiL, i + 1)
-      l + c.cast(DoubleType) * (h - l) / lit(255.0)
-    })
-  }
+  def recoverSq8Index(spark: SparkSession, path: String): Unit =
+    graft.util.IndexStore.recover(spark, path, sq8Store(1))
 
   /** cosine(q, decode(codes)) as one fused native loop
     * ([[graft.functions.Sq8AdcCosineExpr]]) — replaces the interpreted
@@ -1678,7 +1360,7 @@ object Similarity {
     sq8Encode(corpus, lo, hi).write.mode("overwrite").parquet(s"$path/codes")
     val spark = corpus.sparkSession
     graft.util.MetaJson.write(fsOf(spark, path), s"$path/bounds", "bounds",
-      lo.mkString("[", ",", "]") + "|" + hi.mkString("[", ",", "]"))
+      boundsJson(lo, hi))
   }
 
   def readSq8Index(spark: SparkSession, path: String): (DataFrame, Array[Double], Array[Double]) = {

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Sampling, Similarity}
 import graft.sources.{Tables => T}

@@ -586,7 +586,7 @@ object SimilarityPack extends QueryPack {
     // split, so the gated regime IS the production regime: within-cell
     // pair mass stays ~perCell·n instead of growing n²/k at fixed k. At
     // the gated scales S=1 (label quantizer — proven parity); the sf1
-    // twin-vs-fixed timing evidence lives in ScratchTimingSpec/NOTES.
+    // twin-vs-fixed timing evidence lives in the NOTES files.
     QueryDef(
       "sim_knn_graph_sized",
       (s, d) => {

@@ -210,49 +210,25 @@ object FilePipelines {
           .orderBy(col("ts").desc, col("_gen").desc)))
       .filter(col("_rn") === 1).drop("_rn", "_gen")
     // write-then-swap: the read above is lazy, so materialize to a fresh
-    // dir before replacing the target (never overwrite what you read)
-    val tmp = targetDir + ".new"
-    winners.write.mode("overwrite").parquet(tmp)
-    // Crash-safe generation swap: park the live generation aside rather
-    // than deleting it, so every crash window leaves a complete
-    // generation on disk for recoverTarget to restore:
-    //   target → target.old ; target.new → target ; delete target.old
-    val oldPath = new org.apache.hadoop.fs.Path(targetDir + ".old")
-    // rename returns false instead of throwing on several filesystems
-    // (permissions, cross-device); a silent false here drops the merge
-    // and leaves a stale generation with no signal — fail the batch so
-    // foreachBatch surfaces/retries it.
-    def renameOrFail(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-      if (!fs.rename(src, dst))
-        throw new java.io.IOException(s"generation swap: rename $src -> $dst failed")
-    if (fs.exists(tPath)) renameOrFail(tPath, oldPath)
-    renameOrFail(new org.apache.hadoop.fs.Path(tmp), tPath)
-    if (fs.exists(oldPath)) fs.delete(oldPath, true)
+    // dir before replacing the target (never overwrite what you read);
+    // the swap parks the live generation as target.old, so every crash
+    // window leaves a complete generation for recoverTarget to restore
+    val stage = targetDir + ".new"
+    winners.write.mode("overwrite").parquet(stage)
+    graft.util.Generations.swapIn(fs, targetDir, stage)
   }
 
-  /** Restore a consistent table generation after a crash mid-swap.
-    * Idempotent; run before every merge (and safe for readers to call).
-    * - target missing + target.old present → the crash hit between the
-    *   two renames: restore the previous generation (the replayed
-    *   microbatch re-merges into it, and last-wins converges).
-    * - target present + target.old present → the crash hit after the new
-    *   generation landed but before cleanup: drop the stale old.
+  /** Restore a consistent table generation after a crash mid-swap
+    * ([[graft.util.Generations.recover]]), and drop a stray `.new`
+    * stage. Idempotent; run before every merge, never concurrently with
+    * one. A missing target with `target.old` present is put back (the
+    * replayed microbatch re-merges into it, and last-wins converges);
+    * both present means the new generation landed, and the stale old
+    * one is dropped.
     */
-  def recoverTarget(fs: org.apache.hadoop.fs.FileSystem, targetDir: String): Unit = {
-    val tPath = new org.apache.hadoop.fs.Path(targetDir)
-    val oldPath = new org.apache.hadoop.fs.Path(targetDir + ".old")
-    if (fs.exists(oldPath)) {
-      if (!fs.exists(tPath)) {
-        // rename returns false instead of throwing on several filesystems;
-        // proceeding after a silent false would make upsertBatch merge into
-        // an "empty" table and then delete target.old — losing the only
-        // surviving generation. Fail the batch instead.
-        if (!fs.rename(oldPath, tPath))
-          throw new java.io.IOException(
-            s"generation recovery: rename $oldPath -> $tPath failed")
-      } else fs.delete(oldPath, true)
-    }
-  }
+  def recoverTarget(fs: org.apache.hadoop.fs.FileSystem, targetDir: String): Unit =
+    graft.util.Generations.recover(fs, lives = Seq(targetDir),
+      stages = Seq(targetDir + ".new"))
 
   /** foreachBatch upsert pipeline: NDJSON events merged last-wins by
     * event_id into `targetDir`.

@@ -2,14 +2,12 @@ package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Crash-safe whole-directory generation swaps for index/table
-  * maintenance rewrites (compaction): stage the new generation, park the
-  * live one as `<live>.old`, rename the stage in, drop the park — every
-  * crash window leaves a COMPLETE generation on disk for [[recover]] to
-  * restore. The same discipline as
-  * [[graft.streaming.FilePipelines.upsertBatch]]'s table swap, shared by
-  * [[graft.operators.Dedup.compactLshIndex]] and
-  * [[graft.operators.Similarity.compactIvfIndex]].
+/** Crash-safe whole-directory generation swaps: stage the new
+  * generation, park the live one as `<live>.old`, rename the stage in,
+  * drop the park — every crash window leaves a COMPLETE generation on
+  * disk for [[recover]] to restore. Used by [[IndexStore]] (compaction
+  * and refit of the IVF, PQ, SQ8 and LSH indexes) and by
+  * [[graft.streaming.FilePipelines.upsertBatch]]'s table swap.
   *
   * The crash-window guarantee assumes the filesystem renames
   * DIRECTORIES atomically (local FS, HDFS). Plain S3A emulates rename
@@ -20,22 +18,28 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 object Generations {
 
+  // rename returns false instead of throwing on several filesystems
+  // (permissions, cross-device); a silent false would drop the new
+  // generation (or, in recovery, the only surviving one) with no signal
   private def mv(fs: FileSystem, a: Path, b: Path): Unit =
     if (!fs.rename(a, b))
       throw new java.io.IOException(s"generation swap: rename $a -> $b failed")
 
-  /** Replace `live` with the staged dir. Call [[recover]] first. */
+  /** Replace `live` with the staged dir — or install it, when no live
+    * generation exists yet. Call [[recover]] first.
+    */
   def swapIn(fs: FileSystem, live: String, stage: String): Unit = {
     val l = new Path(live)
-    mv(fs, l, new Path(live + ".old"))
+    val old = new Path(live + ".old")
+    if (fs.exists(l)) mv(fs, l, old)
     mv(fs, new Path(stage), l)
-    fs.delete(new Path(live + ".old"), true): Unit
+    fs.delete(old, true): Unit
   }
 
   /** Restore a torn [[swapIn]]: a live dir missing with its parked
     * `.old` generation present is put back; both present means the swap
     * completed and the park is dropped. Stray staging dirs in `stages`
-    * are removed. Safe (and cheap) to call any time.
+    * are removed, in order. Safe (and cheap) to call any time.
     */
   def recover(fs: FileSystem, lives: Seq[String],
       stages: Seq[String]): Unit = {
