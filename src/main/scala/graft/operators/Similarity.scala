@@ -198,32 +198,7 @@ object Similarity {
       .select(col("embedding").cast(ArrayType(DoubleType)))
       .limit(sampleCap).collect()
       .map(_.getSeq[Double](0).toArray)
-    require(sample.length >= ncells, s"corpus smaller than ncells=$ncells")
-    val dims = sample.head.length
-    // seeded init: k distinct sample points
-    val rnd = new java.util.Random(seed)
-    val centers = rnd.ints(0, sample.length).distinct().limit(ncells)
-      .toArray.map(sample(_).clone())
-    // Lloyd iterations on the sample (squared-Euclidean assignment)
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(ncells)(new Array[Double](dims))
-      val counts = new Array[Long](ncells)
-      sample.foreach { v =>
-        var best = 0; var bestD = Double.MaxValue
-        var k = 0
-        while (k < ncells) {
-          var d = 0.0; var i = 0
-          while (i < dims) { val t = v(i) - centers(k)(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = k }
-          k += 1
-        }
-        var i = 0
-        while (i < dims) { sums(best)(i) += v(i); i += 1 }
-        counts(best) += 1
-      }
-      for (k <- 0 until ncells if counts(k) > 0; i <- 0 until dims)
-        centers(k)(i) = sums(k)(i) / counts(k)
-    }
+    val centers = lloyd(sample, ncells, seed, iters)
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = centers.zipWithIndex.map { case (v, i) => (i, v.toSeq) }
@@ -941,31 +916,47 @@ object Similarity {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m")
     val sub = dims / m
     Array.tabulate(m) { s =>
-      val pts = sample.map(_.slice(s * sub, (s + 1) * sub))
-      val rnd = new java.util.Random(seed + s)
-      val centers = rnd.ints(0, pts.length).distinct().limit(kcodes)
-        .toArray.map(pts(_).clone())
-      for (_ <- 0 until iters) {
-        val sums = Array.fill(kcodes)(new Array[Double](sub))
-        val counts = new Array[Long](kcodes)
-        pts.foreach { v =>
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < kcodes) {
-            var d = 0.0; var i = 0
-            while (i < sub) { val t = v(i) - centers(c)(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          var i = 0
-          while (i < sub) { sums(best)(i) += v(i); i += 1 }
-          counts(best) += 1
-        }
-        for (c <- 0 until kcodes if counts(c) > 0; i <- 0 until sub)
-          centers(c)(i) = sums(c)(i) / counts(c)
-      }
-      centers
+      lloyd(sample.map(_.slice(s * sub, (s + 1) * sub)), kcodes, seed + s,
+        iters)
     }
+  }
+
+  /** Seeded squared-Euclidean Lloyd iterations over a driver-local
+    * sample — the quantizer fit of [[ivfIndex]] and [[pqCodebooks]]: `k`
+    * distinct sample points seed the centres, then each iteration
+    * assigns every point to its nearest centre (first-min tie-break) and
+    * moves each non-empty cell's centre to its mean. The sample must
+    * hold at least `k` rows: with fewer, the distinct seed draw never
+    * completes.
+    */
+  private def lloyd(sample: Array[Array[Double]], k: Int, seed: Long,
+      iters: Int): Array[Array[Double]] = {
+    require(sample.length >= k,
+      s"sample of ${sample.length} rows is smaller than k=$k")
+    val dims = sample.head.length
+    val rnd = new java.util.Random(seed)
+    val centers = rnd.ints(0, sample.length).distinct().limit(k)
+      .toArray.map(sample(_).clone())
+    for (_ <- 0 until iters) {
+      val sums = Array.fill(k)(new Array[Double](dims))
+      val counts = new Array[Long](k)
+      sample.foreach { v =>
+        var best = 0; var bestD = Double.MaxValue
+        var c = 0
+        while (c < k) {
+          var d = 0.0; var i = 0
+          while (i < dims) { val t = v(i) - centers(c)(i); d += t * t; i += 1 }
+          if (d < bestD) { bestD = d; best = c }
+          c += 1
+        }
+        var i = 0
+        while (i < dims) { sums(best)(i) += v(i); i += 1 }
+        counts(best) += 1
+      }
+      for (c <- 0 until k if counts(c) > 0; i <- 0 until dims)
+        centers(c)(i) = sums(c)(i) / counts(c)
+    }
+    centers
   }
 
   /** Session-scoped codebook memoization (a real engine trains the

@@ -89,47 +89,17 @@ object FilePipelines {
     * petabytes the filter has absorbed.
     */
   def bloomMergeBatch(batch: DataFrame, stateDir: String, outDir: String,
-      batchId: Long, kHashes: Int = 4, mBits: Int = 32768): Unit = {
-    import graft.operators.Sketches
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
+      batchId: Long, kHashes: Int = 4, mBits: Int = 32768): Unit =
     // fixed micro-batch plan, bounded shuffles — skip AQE's per-exchange
     // stage-materialization jobs ([[graft.util.Tuning.microBatch]])
-    graft.util.Tuning.microBatch(spark) {
-    // Resolve the filesystem FROM the path (as Layout/Warc do): on a
-    // non-local stateDir (HDFS/S3) a local listing would silently report
-    // no prior epochs and every batch would read novel — wrong verdicts
-    // with no error.
-    val sPath = new Path(stateDir)
-    val fs = sPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochs = bloomEpochs(fs, stateDir)
-    val priorEpochs = epochs.filter(_ < batchId)
-    // epoch state is ≤ mBits/32 rows no matter the history — read it
-    // DRIVER-SIDE (graft.util.BloomState: no scan stage, no collect
-    // execution) and feed the publish union a local relation; the probe
-    // verdict is a map-side projection over the dense register array
-    val priorRows =
-      if (priorEpochs.isEmpty) Seq.empty[(Option[Long], Option[Long])]
-      else graft.util.BloomState.read(fs, s"$stateDir/epoch=${priorEpochs.max}")
-    val prior = priorLocalRelation(spark, priorRows)
-    Sketches.bloomProbeRegister(graft.util.BloomState.dense(priorRows, mBits),
-        batch, col("doc_id"), col("text"), kHashes, mBits)
-      .withColumnRenamed("id", "doc_id")
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-    Sketches.bloomMerge(prior, batch, col("text"), kHashes, mBits)
-      .write.mode("overwrite").json(s"$stateDir/epoch=$batchId")
-    // GC everything STRICTLY OLDER than the prior epoch this batch
-    // actually read (each epoch subsumes all before it). Keying the cut
-    // on the read prior — not batchId-1 — keeps replays correct under
-    // NON-contiguous batch ids too: batch 20 arriving after batch 10
-    // must retain epoch=10 for its own crash window, or a replay would
-    // rebuild epoch=20 from an empty prior and forget all history.
-    priorEpochs.sorted.lastOption.foreach { keep =>
-      epochs.filter(_ < keep).foreach { e =>
-        fs.delete(new Path(s"$stateDir/epoch=$e"), true) }
+    graft.util.Tuning.microBatch(batch.sparkSession) {
+      val bloom = graft.util.BloomState.epoch(batch.sparkSession, stateDir,
+        batchId)
+      bloom.probe(batch, col("doc_id"), col("text"), kHashes, mBits)
+        .withColumnRenamed("id", "doc_id")
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+      bloom.publish(batch, col("text"), kHashes, mBits)
     }
-    }
-  }
 
   /** Streaming Bloom novelty ingest: NDJSON document segments land in
     * `inDir`; each micro-batch gets seen/novel verdicts against
@@ -141,12 +111,20 @@ object FilePipelines {
     */
   def bloomNoveltyStream(spark: SparkSession, inDir: String, stateDir: String,
       outDir: String, checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) =>
-        bloomMergeBatch(b, stateDir, outDir, id))
+    eachBatch(spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1")
+        .json(inDir), checkpointDir) {
+      (b, id) => bloomMergeBatch(b, stateDir, outDir, id)
+    }
+
+  /** Run `f` on each micro-batch of `source` with its batch id (at least
+    * once, checkpointed in `checkpointDir`) over the input present at
+    * start, then stop — the AvailableNow trigger every foreachBatch
+    * pipeline here runs on.
+    */
+  private def eachBatch(source: DataFrame, checkpointDir: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream.foreachBatch(f)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -235,12 +213,8 @@ object FilePipelines {
     */
   def eventsUpsertStream(spark: SparkSession, inDir: String, targetDir: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(eventSchema).json(inDir)
-      .writeStream
-      .foreachBatch((batch: DataFrame, _: Long) => upsertBatch(batch, targetDir))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(eventSchema).json(inDir),
+      checkpointDir)((batch, _) => upsertBatch(batch, targetDir))
 
   /** Streaming face of the reference's R5→R4 transform job: NDJSON
     * resources stream in (schema-directed, no inference pass), a pure
@@ -266,31 +240,6 @@ object FilePipelines {
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Driver-read epoch rows as a LOCAL relation for the publish union —
-    * no scan job; nulls preserved (see [[graft.util.BloomState.read]]).
-    */
-  private def priorLocalRelation(spark: SparkSession,
-      rows: Seq[(Option[Long], Option[Long])]): DataFrame = {
-    val jrows: java.util.List[org.apache.spark.sql.Row] =
-      new java.util.ArrayList(rows.size)
-    rows.foreach { case (w, b) =>
-      jrows.add(org.apache.spark.sql.Row(
-        w.map(java.lang.Long.valueOf).orNull,
-        b.map(java.lang.Long.valueOf).orNull)): Unit }
-    spark.createDataFrame(jrows,
-      StructType(Seq(StructField("word", LongType),
-        StructField("bits", LongType))))
-  }
-
-  /** List the Bloom-state epoch ids under `stateDir` (empty if absent). */
-  private def bloomEpochs(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Seq[Long] = {
-    val sPath = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(sPath)) Seq.empty
-    else fs.listStatus(sPath).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("epoch=")).map(_.stripPrefix("epoch=").toLong)
-  }
-
   /** One micro-batch of the incremental-ingest ADMISSION pipeline — the
     * per-segment decision a 100 TB crawl runs when a new segment lands,
     * composed from the engine's incremental pieces: exact "seen before"
@@ -304,23 +253,13 @@ object FilePipelines {
     * oracle.
     *
     * Exactly-once OUTPUT and STATE from foreachBatch's at-least-once
-    * delivery, with ORDERED commit points so every crash window replays
-    * to the same final state:
-    *
-    *  1. `_committed/batch-<id>` under outDir: fully-landed batches
-    *     short-circuit. (The only safe replay of a batch whose append
-    *     already published is NO recompute — the index now contains the
-    *     batch's own rows.)
-    *  2. verdicts land FIRST (overwrite of `batch=<id>`); a replay that
-    *     finds them durable (_SUCCESS) SKIPS recompute for the same
-    *     reason — verdicts freeze before any index mutation.
-    *  3. the admitted set is read BACK from the durable verdicts (never
-    *     recomputed) and appended via [[Dedup.appendToLshIndexCommitted]],
-    *     itself idempotent per batch id.
-    *  4. Bloom epoch publish + GC ([[bloomMergeBatch]]'s discipline: a
-    *     batch reads only epochs STRICTLY below its own id, so the
-    *     idempotent overwrite of `epoch=<id>` reproduces itself).
-    *  5. the committed marker, last.
+    * delivery through [[admitBatch]]'s ordered commit points. Its landing
+    * step appends the admitted docs via
+    * [[graft.operators.Dedup.appendToLshIndexCommitted]] (itself
+    * idempotent per batch id), then publishes the Bloom epoch
+    * ([[graft.util.BloomState.epoch]]: a batch reads only epochs STRICTLY
+    * below its own id, so the idempotent overwrite of `epoch=<id>`
+    * reproduces itself).
     *
     * At 100 TB: the Bloom state is ≤ mBits/32 rows per epoch no matter
     * how much history it has absorbed (driver-read, a map-side register
@@ -336,97 +275,111 @@ object FilePipelines {
       family: graft.operators.Dedup.MinHashFamily =
         graft.operators.Dedup.FastFamily,
       kHashes: Int = 4, mBits: Int = 32768): Unit = {
-    import graft.operators.{Dedup, Sketches}
+    import graft.operators.Dedup
+    val spark = batch0.sparkSession
+    // driver-read state, read once a step needs it: the probe rides as
+    // a register-array projection inside the verdict plan and the publish
+    // unions a local relation — no bloom-side scan stage, broadcast
+    // build, or per-id aggregation exchange per micro-batch
+    lazy val bloom = graft.util.BloomState.epoch(spark, stateDir, batchId)
+    admitBatch(batch0.select(col("doc_id"), col("text")), "doc_id", outDir,
+        batchId, ingestVerdictSchema) { batch =>
+      val near = Dedup.probeLshIndex(spark, indexDir, batch, threshold,
+          n, numPerms, rowsPerBand, family = family)
+        .groupBy(col("q_id").as("doc_id"))
+        .agg(round(max(col("jaccard")), 6).as("best_jaccard"))
+      // the probe is a PROJECTION of the cached batch (one row per batch
+      // row), so the near-dup side joins straight onto it
+      bloom.probe(batch, col("doc_id"), col("text"), kHashes, mBits)
+        .withColumnRenamed("id", "doc_id")
+        .withColumnRenamed("seen", "seen_exact")
+        .join(near, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("seen_exact"),
+          col("best_jaccard").isNotNull.as("near_dup"),
+          col("best_jaccard"),
+          (!col("seen_exact") && col("best_jaccard").isNull).as("admit"))
+    } { (batch, admitted, admits) =>
+      // the observed admit count sizes the append's staging width with
+      // no count job of its own; a replay that skipped the verdict write
+      // passes 0, and the append counts (rare path)
+      Dedup.appendToLshIndexCommitted(spark, indexDir, admitted, batchId,
+        n, numPerms, rowsPerBand, family, setsFiles = admits.fold(0)(
+          graft.util.CommittedAppend.outFilesFor(spark, _))): Unit
+      bloom.publish(batch, col("text"), kHashes, mBits)
+    }
+  }
+
+  /** The ordered commit points of every admission micro-batch
+    * ([[ingestAdmissionBatch]], [[semanticAdmissionBatch]]), so that
+    * every crash window of foreachBatch's at-least-once delivery replays
+    * to the same final output and state:
+    *
+    *  1. `_committed/batch-<id>` under outDir: fully-landed batches
+    *     short-circuit. (The only safe replay of a batch whose append
+    *     already published is NO recompute — the index now contains the
+    *     batch's own rows.)
+    *  2. verdicts land FIRST (overwrite of `batch=<id>`), frozen by our
+    *     own `_verdicts/batch-<id>` marker; a replay that finds it SKIPS
+    *     recompute for the same reason — verdicts freeze before any state
+    *     mutation. (Not the sink's `_SUCCESS`: cloud committers often
+    *     disable marksuccessfuljobs, and a replay that recomputed verdicts
+    *     against the already-grown index would diverge.) The admit count
+    *     is observed on that write, in the same job.
+    *  3. the admitted set is read BACK from the durable verdicts (never
+    *     recomputed), under the pinned `verdictSchema` (no footer
+    *     inference pass), and handed to the kind's landing step, itself
+    *     idempotent per batch id.
+    *  4. the committed marker, last.
+    *
+    * An admission kind supplies two steps over the cached batch: its
+    * `verdicts` plan, built only when the verdicts are not yet frozen
+    * (building it may run probe jobs), and its `land` step for the
+    * admitted rows, given the admit count observed on this attempt's
+    * verdict write (None when a replay found the verdicts frozen).
+    *
+    * `batch` is cached for the batch's life, and the whole body runs with
+    * AQE off ([[graft.util.Tuning.microBatch]] — the r22 event-log
+    * profile: stage-materialization jobs were most of the ~27 jobs per
+    * batch) in a [[graft.util.Scratch.scoped]] release: internal caches
+    * operators register during the batch (e.g. probeLshIndex's band
+    * table) are garbage the moment its sinks commit — a CONTINUOUS
+    * ingest would otherwise accrete one per micro-batch forever. Scoped,
+    * not a blanket release: other pipelines' session caches stay.
+    */
+  private def admitBatch(batch0: DataFrame, key: String, outDir: String,
+      batchId: Long, verdictSchema: StructType)(
+      verdicts: DataFrame => DataFrame)(
+      land: (DataFrame, DataFrame, Option[Long]) => Unit): Unit = {
     import org.apache.hadoop.fs.Path
     val spark = batch0.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val outFs = new Path(outDir).getFileSystem(conf)
-    if (outFs.exists(new Path(s"$outDir/_committed/batch-$batchId"))) return
-    // scoped scratch release: internal caches operators register during
-    // this batch (e.g. probeLshIndex's band table) are garbage the
-    // moment the batch's sinks commit — a CONTINUOUS ingest would
-    // otherwise accrete one per micro-batch forever. Scoped, not a
-    // blanket release: other pipelines' session caches stay.
-    // AQE off for the batch's fixed, trigger-bounded plans
-    // ([[graft.util.Tuning.microBatch]] — r22 event-log profile: the
-    // stage-materialization jobs were most of the ~27 jobs per batch).
+    val fs = new Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val committed = new Path(s"$outDir/_committed/batch-$batchId")
+    if (fs.exists(committed)) return
     graft.util.Tuning.microBatch(spark) {
     graft.util.Scratch.scoped(spark) {
-    val batch = batch0.select(col("doc_id"), col("text")).cache()
-    try {
-      val sFs = new Path(stateDir).getFileSystem(conf)
-      val epochs = bloomEpochs(sFs, stateDir)
-      val priorEpochs = epochs.filter(_ < batchId)
-      // driver-read state ([[bloomMergeBatch]]'s discipline): the probe
-      // rides as a register-array projection inside the verdict plan and
-      // the publish unions a local relation — no bloom-side scan stage,
-      // broadcast build, or per-id aggregation exchange per micro-batch
-      val priorRows =
-        if (priorEpochs.isEmpty) Seq.empty[(Option[Long], Option[Long])]
-        else graft.util.BloomState.read(sFs,
-          s"$stateDir/epoch=${priorEpochs.max}")
-      val prior = priorLocalRelation(spark, priorRows)
-      val verdictDir = s"$outDir/batch=$batchId"
-      // the verdicts-frozen guard is OUR OWN marker, not the sink's
-      // _SUCCESS (optional committer behavior — cloud committers often
-      // disable marksuccessfuljobs, and a replay that recomputed
-      // verdicts against the already-grown index would diverge)
-      val verdictMark = new Path(s"$outDir/_verdicts/batch-$batchId")
-      // admitted-row count observed ON the verdict write (free metric in
-      // the same job) so the committed append's scale-adaptive staging
-      // width needs no separate count job per micro-batch; a replay that
-      // skips the write falls back to the append's own count (rare path)
-      var admitFiles = 0
-      if (!outFs.exists(verdictMark)) {
-        val seen = Sketches.bloomProbeRegister(
-            graft.util.BloomState.dense(priorRows, mBits), batch,
-            col("doc_id"), col("text"), kHashes, mBits)
-          .withColumnRenamed("id", "doc_id")
-          .withColumnRenamed("seen", "seen_exact")
-        val near = Dedup.probeLshIndex(spark, indexDir, batch, threshold,
-            n, numPerms, rowsPerBand, family = family)
-          .groupBy(col("q_id").as("doc_id"))
-          .agg(round(max(col("jaccard")), 6).as("best_jaccard"))
-        val obs = org.apache.spark.sql.Observation()
-        // `seen` is a register-probe PROJECTION of the cached batch (one
-        // row per batch row) — the old join of batch back onto it was a
-        // self-join left over from the aggregated-probe era
-        seen
-          .join(near, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("seen_exact"),
-            col("best_jaccard").isNotNull.as("near_dup"),
-            col("best_jaccard"),
-            (!col("seen_exact") && col("best_jaccard").isNull).as("admit"))
-          .observe(obs, sum(col("admit").cast("long")).as("admits"))
-          .write.mode("overwrite").parquet(verdictDir)
-        outFs.mkdirs(new Path(s"$outDir/_verdicts"))
-        outFs.create(verdictMark, true).close()
-        val admits = Option(obs.get("admits")).collect {
-          case l: java.lang.Long => l.longValue() } // null when 0 rows
-        admitFiles = admits
-          .map(a => graft.util.CommittedAppend.outFilesFor(spark, a))
-          .getOrElse(1) // an empty batch stages one (empty) file
-      }
-      // read-back schema is pinned (the verdict write above): skips the
-      // per-micro-batch footer-inference pass
-      val admitted = batch.join(
-        spark.read.schema(ingestVerdictSchema).parquet(verdictDir)
-          .filter(col("admit")).select("doc_id"),
-        "doc_id")
-      Dedup.appendToLshIndexCommitted(spark, indexDir, admitted, batchId,
-        n, numPerms, rowsPerBand, family, setsFiles = admitFiles): Unit
-      Sketches.bloomMerge(prior, batch, col("text"), kHashes, mBits)
-        .write.mode("overwrite").json(s"$stateDir/epoch=$batchId")
-      // GC keyed on the prior epoch actually read (see bloomMergeBatch):
-      // correct under non-contiguous batch ids, identical under
-      // contiguous ones
-      priorEpochs.sorted.lastOption.foreach { keep =>
-        epochs.filter(_ < keep).foreach { e =>
-          sFs.delete(new Path(s"$stateDir/epoch=$e"), true) }
-      }
-      outFs.mkdirs(new Path(s"$outDir/_committed"))
-      outFs.create(new Path(s"$outDir/_committed/batch-$batchId"), true).close()
-    } finally { batch.unpersist(); () }
+      val batch = batch0.cache()
+      try {
+        val verdictDir = s"$outDir/batch=$batchId"
+        val verdictMark = new Path(s"$outDir/_verdicts/batch-$batchId")
+        val admits = if (fs.exists(verdictMark)) None else {
+          val obs = org.apache.spark.sql.Observation()
+          verdicts(batch)
+            .observe(obs, sum(col("admit").cast("long")).as("admits"))
+            .write.mode("overwrite").parquet(verdictDir)
+          fs.mkdirs(verdictMark.getParent)
+          fs.create(verdictMark, true).close()
+          // the observed sum is null over 0 rows
+          Some(Option(obs.get("admits")).collect {
+            case l: java.lang.Long => l.longValue() }.getOrElse(0L))
+        }
+        land(batch, batch.join(
+          spark.read.schema(verdictSchema).parquet(verdictDir)
+            .filter(col("admit")).select(key),
+          key), admits)
+        fs.mkdirs(committed.getParent)
+        fs.create(committed, true).close()
+      } finally { batch.unpersist(); () }
     }
     }
   }
@@ -455,16 +408,12 @@ object FilePipelines {
       checkpointDir: String,
       family: graft.operators.Dedup.MinHashFamily =
         graft.operators.Dedup.FastFamily): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) =>
-        ingestAdmissionBatch(b, indexDir, stateDir, outDir, id,
-          family = family))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1")
+        .json(inDir), checkpointDir) {
+      (b, id) => ingestAdmissionBatch(b, indexDir, stateDir, outDir, id,
+        family = family)
+    }
 
   /** The COMPOSED crawl-ingest capstone: raw `.warc.gz` segments arrive
     * (the Common Crawl format, through the engine's own splittable
@@ -544,16 +493,12 @@ object FilePipelines {
   def mergeUpsertStream(spark: SparkSession, inDir: String,
       tableDir: String, checkpointDir: String,
       schema: StructType, keyCol: String, partCol: String): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, _: Long) =>
-        graft.operators.Layout.mergeIntoPartitioned(b.sparkSession,
-          tableDir, b, keyCol, partCol))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir), checkpointDir) {
+      (b, _) => graft.operators.Layout.mergeIntoPartitioned(b.sparkSession,
+        tableDir, b, keyCol, partCol)
+    }
 
   /** One micro-batch of the SEMANTIC admission pipeline — the
     * dense-embedding twin of [[ingestAdmissionBatch]], the online face
@@ -563,12 +508,9 @@ object FilePipelines {
     * history is never re-scanned whole), each vector gets
     * (best_cos, near_dup, admit) verdicts, and ADMITTED vectors join
     * the index exactly-once ([[graft.operators.Similarity.appendToIvfIndexCommitted]])
-    * so the NEXT segment probes them. Ordered commit points, the
-    * ingestAdmissionBatch discipline: committed marker short-circuits;
-    * verdicts freeze (own `_verdicts` marker) BEFORE any index
-    * mutation; the admitted set is read BACK from durable verdicts;
-    * marker last — exactly-once output and state under at-least-once
-    * replay.
+    * so the NEXT segment probes them. Exactly-once output and state
+    * under at-least-once replay through [[admitBatch]]'s ordered commit
+    * points, shared with ingestAdmissionBatch.
     *
     * At 100 TB: the centroid table is metadata-sized (broadcast), the
     * candidate join prunes on the cell-partitioned index layout, and
@@ -580,40 +522,13 @@ object FilePipelines {
   def semanticAdmissionBatch(batch0: DataFrame, indexDir: String,
       outDir: String, batchId: Long, threshold: Double = 0.9,
       nprobe: Int = 2): Unit = {
-    import graft.operators.Similarity
-    import org.apache.hadoop.fs.Path
     val spark = batch0.sparkSession
-    val outFs = new Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (outFs.exists(new Path(s"$outDir/_committed/batch-$batchId"))) return
-    // AQE off for the batch's fixed, trigger-bounded plans
-    // ([[graft.util.Tuning.microBatch]])
-    graft.util.Tuning.microBatch(spark) {
-    graft.util.Scratch.scoped(spark) {
-      val batch = batch0.select(col("vec_id"), col("embedding")).cache()
-      try {
-        val verdictDir = s"$outDir/batch=$batchId"
-        val verdictMark = new Path(s"$outDir/_verdicts/batch-$batchId")
-        if (!outFs.exists(verdictMark)) {
-          semanticVerdicts(spark, indexDir, batch, threshold, nprobe)
-            .write.mode("overwrite").parquet(verdictDir)
-          outFs.mkdirs(new Path(s"$outDir/_verdicts"))
-          outFs.create(verdictMark, true).close()
-        }
-        // read-back schema pinned (the verdict write above): skips the
-        // per-micro-batch footer-inference pass
-        val admitted = batch.join(
-          spark.read.schema(semanticVerdictSchema).parquet(verdictDir)
-            .filter(col("admit"))
-            .select("vec_id"),
-          "vec_id")
-        Similarity.appendToIvfIndexCommitted(spark, indexDir, admitted,
-          batchId): Unit
-        outFs.mkdirs(new Path(s"$outDir/_committed"))
-        outFs.create(new Path(s"$outDir/_committed/batch-$batchId"), true)
-          .close()
-      } finally { batch.unpersist(); () }
-    }
+    admitBatch(batch0.select(col("vec_id"), col("embedding")), "vec_id",
+        outDir, batchId, semanticVerdictSchema)(
+      semanticVerdicts(spark, indexDir, _, threshold, nprobe)) {
+      (_, admitted, _) =>
+        graft.operators.Similarity.appendToIvfIndexCommitted(spark,
+          indexDir, admitted, batchId): Unit
     }
   }
 
@@ -682,15 +597,12 @@ object FilePipelines {
   def semanticAdmissionStream(spark: SparkSession, inDir: String,
       indexDir: String, outDir: String, checkpointDir: String,
       threshold: Double = 0.9, nprobe: Int = 2): StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) =>
-        semanticAdmissionBatch(b, indexDir, outDir, id, threshold, nprobe))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(vecSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir), checkpointDir) {
+      (b, id) => semanticAdmissionBatch(b, indexDir, outDir, id, threshold,
+        nprobe)
+    }
 
   /** One micro-batch of the packed-sequence DELIVERY pipeline — the
     * stream face of the curation → packing capstone
@@ -766,16 +678,11 @@ object FilePipelines {
   def curationPackedStream(spark: SparkSession, inDir: String,
       storeDir: String, checkpointDir: String,
       seqLen: Int = 256): StreamingQuery =
-    spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", "1")
-      .json(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) => {
-        packedDeliveryBatch(b, storeDir, id, seqLen): Unit
-      })
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(docSchema)
+        .option("maxFilesPerTrigger", "1")
+        .json(inDir), checkpointDir) {
+      (b, id) => packedDeliveryBatch(b, storeDir, id, seqLen): Unit
+    }
 
   /** Streaming dense-index ingest: embedding segments (parquet files —
     * no text round-trip of floats) land in `inDir`, and each micro-batch
@@ -790,15 +697,10 @@ object FilePipelines {
     */
   def ivfIngestStream(spark: SparkSession, inDir: String,
       indexDir: String, checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(vecSchema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-      .writeStream
-      .foreachBatch((b: DataFrame, id: Long) => {
-        graft.operators.Similarity.appendToIvfIndexCommitted(
-          b.sparkSession, indexDir, b, id): Unit
-      })
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    eachBatch(spark.readStream.schema(vecSchema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(inDir), checkpointDir) {
+      (b, id) => graft.operators.Similarity.appendToIvfIndexCommitted(
+        b.sparkSession, indexDir, b, id): Unit
+    }
 }

@@ -25,42 +25,32 @@ import org.apache.spark.sql.SparkSession
   * with an explicit width; none of the scoped paths uses the REBALANCE
   * hint ([[graft.operators.Layout.mergeIntoPartitioned]] does, and is
   * deliberately NOT scoped).
-  *
-  * Deployments replaying oversized backfills through foreachBatch
-  * (AvailableNow over one huge file, where runtime re-planning could pay
-  * again) can opt back in per session with
-  * `spark.graft.microbatch.adaptive=true`, which makes this a no-op.
   */
 object Tuning {
 
   private val AqeKey = "spark.sql.adaptive.enabled"
   private val LimitKey = "spark.sql.limit.initialNumPartitions"
-  private val OverrideKey = "spark.graft.microbatch.adaptive"
 
   def microBatch[T](spark: SparkSession)(body: => T): T = {
-    val optIn = spark.conf.getOption(OverrideKey).contains("true")
-    if (optIn) body
-    else {
-      val prevAqe = spark.conf.get(AqeKey, "true")
-      val prevLimit = spark.conf.getOption(LimitKey)
-      spark.conf.set(AqeKey, "false")
-      // bounded limit+collect probes (probeLshIndex's pushdown-regime
-      // signature collect) otherwise scan 1, 4, 16, … partitions in
-      // separate driver round-trips (CollectLimit's scale-up waves — 4
-      // jobs per micro-batch at 32 shuffle partitions). A micro-batch's
-      // data is small by contract, so scan up to 64 partitions in the
-      // first wave; capped (not shuffle.partitions) so an oversized
-      // backfill on a wide deployment cannot ship partitions × limit
-      // rows to the driver in one wave.
-      spark.conf.set(LimitKey,
-        math.min(spark.sessionState.conf.numShufflePartitions, 64).toString)
-      try body
-      finally {
-        spark.conf.set(AqeKey, prevAqe)
-        prevLimit match {
-          case Some(v) => spark.conf.set(LimitKey, v)
-          case None => spark.conf.unset(LimitKey)
-        }
+    val prevAqe = spark.conf.get(AqeKey, "true")
+    val prevLimit = spark.conf.getOption(LimitKey)
+    spark.conf.set(AqeKey, "false")
+    // bounded limit+collect probes (probeLshIndex's pushdown-regime
+    // signature collect) otherwise scan 1, 4, 16, … partitions in
+    // separate driver round-trips (CollectLimit's scale-up waves — 4
+    // jobs per micro-batch at 32 shuffle partitions). A micro-batch's
+    // data is small by contract, so scan up to 64 partitions in the
+    // first wave; capped (not shuffle.partitions) so an oversized
+    // backfill on a wide deployment cannot ship partitions × limit
+    // rows to the driver in one wave.
+    spark.conf.set(LimitKey,
+      math.min(spark.sessionState.conf.numShufflePartitions, 64).toString)
+    try body
+    finally {
+      spark.conf.set(AqeKey, prevAqe)
+      prevLimit match {
+        case Some(v) => spark.conf.set(LimitKey, v)
+        case None => spark.conf.unset(LimitKey)
       }
     }
   }

@@ -12,9 +12,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  // SPARK_GRAFT_TEST_CPUS overrides the suite's core count (default 4) —
-  // profiling runs (ScratchTimingSpec) use it to reproduce the driver's
-  // local[32] shape; CI stays at 4.
+  // SPARK_GRAFT_TEST_CPUS overrides the suite's core count (default 4),
+  // e.g. to reproduce the driver's local[32] shape; CI stays at 4.
   private val cpus = sys.env.getOrElse("SPARK_GRAFT_TEST_CPUS", "4").toInt
   lazy val session: SparkSession = {
     val s = GraftSession

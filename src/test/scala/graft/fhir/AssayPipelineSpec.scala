@@ -114,7 +114,6 @@ class AssayPipelineSpec extends SparkSpec {
       .withColumn("assay_id", lit("g-01"))
       .withColumn("patient_ref", lit("Patient/p-002"))
       .withColumn("doc_key", lit("g-01"))
-    val out = AssayPipeline.rewriteDocsNonR4(docs).head()
     val row = AssayPipeline.rewriteDocsNonR4(docs)
     assert(row.select(element_at(col("basedOn"), -1).getField("reference"))
       .head().getString(0) == "ServiceRequest/g-01")

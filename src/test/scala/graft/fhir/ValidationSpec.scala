@@ -1,7 +1,5 @@
 package graft.fhir
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.functions._
 

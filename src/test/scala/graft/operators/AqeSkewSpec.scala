@@ -18,7 +18,6 @@ import graft.SparkSpec
 class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits the hot key's partition in a skewed shuffle join") {
-    import spark.implicits._
     val conf = spark.conf
     val saved = Seq(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",

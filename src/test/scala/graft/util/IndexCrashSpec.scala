@@ -9,9 +9,12 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FilterFileSystem, P
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{lit, struct}
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 
 import graft.SparkSpec
+import graft.fhir.FhirStore
 import graft.operators.{Dedup, Similarity}
 import graft.streaming.FilePipelines
 
@@ -91,14 +94,17 @@ object CrashFs {
 }
 
 /** Crash-state enumeration of the persisted-index lifecycle
-  * ([[IndexStore]]) and the upsert table swap, after ALICE (Pillai et
-  * al., OSDI 2014): for every mutating filesystem call k of a clean
-  * run, a fresh copy of the fixture runs the operation with a crash at
-  * call k, then the public recovery entry point, then the operation
-  * again. Recovery must leave a complete generation (the fixture's or
-  * the clean run's), and the retry must end equal to the clean run —
-  * the same rows, the same metadata — with no parked `.old` generation,
-  * stage or fence left behind.
+  * ([[IndexStore]]), the upsert table swap and the stream commit
+  * protocols, after ALICE (Pillai et al., OSDI 2014): for every mutating
+  * filesystem call k of a clean run, a fresh copy of the fixture runs
+  * the operation with a crash at call k, then the public recovery entry
+  * point, then the operation again. Recovery must leave a complete
+  * generation (the fixture's or the clean run's), and the retry must end
+  * equal to the clean run — the same rows, the same metadata — with no
+  * parked `.old` generation, stage, fence or committed-append staging
+  * left behind. The stream commit protocols ([[CommittedAppend]], the
+  * admission and Bloom sinks) promise replay convergence, not an atomic
+  * reader view, so for them the retry is the recovery.
   */
 class IndexCrashSpec extends SparkSpec {
   import spark.implicits._
@@ -143,6 +149,29 @@ class IndexCrashSpec extends SparkSpec {
       n.endsWith(".old") || n.endsWith(".new") || n.startsWith("_compact_")
         || n.startsWith("_refit_") || n == "_maintenance_fence")
 
+  /** Committed-append stagings left anywhere under `root`. */
+  private def staged(root: File): Seq[String] = {
+    val walk = Files.walk(root.toPath)
+    try walk.iterator.asScala.map(_.toString)
+      .filter(_.contains("/_staging/batch=")).toSeq
+    finally walk.close()
+  }
+
+  /** The rows of each parquet dir in `data`, the register rows of each
+    * epoch under each Bloom state dir in `blooms`, and the file names in
+    * each marker dir in `markers`.
+    */
+  private def sink(data: String*)(blooms: String*)(markers: String*)(
+      s: SparkSession, root: String): Seq[String] = {
+    val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
+    def names(d: String) = Try(fs.listStatus(new Path(s"$root/$d")).toSeq
+      .map(_.getPath.getName).sorted).getOrElse(Nil)
+    dump(data: _*)()(s, root) ++
+      blooms.flatMap(b => names(b).map(e =>
+        s"$b/$e: " + BloomState.read(fs, s"$root/$b/$e").sorted)) ++
+      markers.map(m => s"$m: " + names(m).mkString(","))
+  }
+
   /** Rows of each parquet dir and the record of each metadata dir. */
   private def dump(data: String*)(meta: String*)(s: SparkSession,
       root: String): Seq[String] = {
@@ -159,7 +188,23 @@ class IndexCrashSpec extends SparkSpec {
   private def enumerate(name: String, fixture: File)(
       op: (SparkSession, String) => Unit)(
       recover: (SparkSession, String) => Unit)(
+      state: (SparkSession, String) => Seq[String]): Unit =
+    trials(name, fixture, op, Some(recover), state)
+
+  /** [[enumerate]] for a protocol whose retry is its recovery: no
+    * recovery step and no complete-generation check between crash and
+    * retry.
+    */
+  private def enumerateRetry(name: String, fixture: File)(
+      op: (SparkSession, String) => Unit)(
+      state: (SparkSession, String) => Seq[String]): Unit =
+    trials(name, fixture, op, None, state)
+
+  private def trials(name: String, fixture: File,
+      op: (SparkSession, String) => Unit,
+      recover: Option[(SparkSession, String) => Unit],
       state: (SparkSession, String) => Seq[String]): Unit = {
+    val t0 = System.nanoTime
     def fresh(trial: Int): String = {
       val d = new File(base, s"$name-$trial")
       if (fixture.exists) copyTree(fixture, d)
@@ -168,7 +213,7 @@ class IndexCrashSpec extends SparkSpec {
     // a complete generation is the fixture's or the clean run's; no
     // state at all is a generation too when the fixture has no table
     def read(s: SparkSession, root: String) = Try(state(s, root)).toOption
-    val before = read(sessions.get, uri(fixture))
+    lazy val before = read(sessions.get, uri(fixture))
     val clean = fresh(0)
     CrashFs.arm(0)
     op(sessions.get, clean)
@@ -187,15 +232,18 @@ class IndexCrashSpec extends SparkSpec {
           .takeWhile(_ != null).exists(_.isInstanceOf[CrashFs.Crash])))
         Some(s"call $k: no injected crash, got $crashed")
       else {
-        recover(s, root)
-        val recovered = read(s, root)
-        if (recovered != before && !recovered.contains(want))
+        val incomplete = recover.exists { r =>
+          r(s, root)
+          val recovered = read(s, root)
+          recovered != before && !recovered.contains(want)
+        }
+        if (incomplete)
           Some(s"call $k: recovery left an incomplete generation")
         else {
           op(s, root)
           if (state(s, root) != want) Some(s"call $k: retry state differs")
-          else if (leftovers(local).nonEmpty)
-            Some(s"call $k: left ${leftovers(local)}")
+          else if (leftovers(local).nonEmpty || staged(local).nonEmpty)
+            Some(s"call $k: left ${leftovers(local) ++ staged(local)}")
           else None
         }
       }
@@ -208,7 +256,7 @@ class IndexCrashSpec extends SparkSpec {
         }))
       tasks.flatMap(_.get())
     } finally pool.shutdown()
-    info(s"$name: $calls crash points")
+    info(s"$name: $calls crash points, ${(System.nanoTime - t0) / 1000000} ms")
     assert(failures.isEmpty, s"$name (of $calls calls): $failures")
   }
 
@@ -295,5 +343,102 @@ class IndexCrashSpec extends SparkSpec {
     enumerate("upsert", table)(upsert(2 until 6))(recover)(dump("t")())
     enumerate("upsert-first", new File(base, "fixture-none"))(
       upsert(2 until 6))(recover)(dump("t")())
+  }
+
+  test("committed appends (update-create, IVF) converge on retry after a " +
+      "crash at every call") {
+    // a version feed of the narrowest resource shape update-create takes
+    val feed = fixture("feed") { p =>
+      Seq(("p-1", "1", "male"), ("p-1", "2", "female"), ("p-2", "1", "male"))
+        .toDF("id", "versionId", "gender")
+        .select($"id", struct($"versionId",
+          lit("2024-01-01T00:00:00Z").as("lastUpdated")).as("meta"),
+          $"gender")
+        .write.parquet(s"$p/feed")
+    }
+    enumerateRetry("update-create", feed) { (s, p) =>
+      import s.implicits._
+      val batch = Seq(("p-1", "other"), ("p-3", "female")).toDF("id", "gender")
+      FhirStore.updateCreate(s, s"$p/feed", batch, 1L,
+        "2025-01-15T00:00:00Z"): Unit
+    }(sink("feed")()("feed/_committed"))
+
+    val ivf = fixture("ivf-append") { p =>
+      Similarity.writeIvfIndex(half(0, 12), ncells = 2, p)
+    }
+    enumerateRetry("ivf-append", ivf)((s, p) =>
+      Similarity.appendToIvfIndexCommitted(s, p, vecsIn(s, 12, 24), 1L): Unit)(
+      sink("cells")()("_committed"))
+  }
+
+  /** Rows [lo, hi) of `vecs`, built in `s`: a trial's batch must belong
+    * to its own session, whose conf the sink scopes.
+    */
+  private def vecsIn(s: SparkSession, lo: Long, hi: Long) = {
+    import s.implicits._
+    vecRows.filter(v => v._1 >= lo && v._1 < hi).toDF("vec_id", "embedding")
+  }
+  private lazy val vecRows = vecs.collect().toSeq
+    .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+
+  /** Documents `ids` of seeded random words, in `s`; ids from 100 up
+    * repeat the text of id - 100.
+    */
+  private def docsIn(s: SparkSession, ids: Seq[Long]) = {
+    import s.implicits._
+    ids.map { i =>
+      val rnd = new scala.util.Random(i % 100)
+      (i, Seq.fill(12)(rnd.alphanumeric.take(6).mkString).mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  test("ingest and semantic admission converge on retry after a crash at " +
+      "every call") {
+    // one LSH band: each band dir adds a mkdirs and a rename to an append
+    def admit(ids: Seq[Long], batchId: Long)(s: SparkSession,
+        p: String): Unit =
+      FilePipelines.ingestAdmissionBatch(docsIn(s, ids), s"$p/index",
+        s"$p/state", s"$p/out", batchId, numPerms = 2)
+    // Bloom epochs 0 and 1 seeded, so the batch's publish GCs epoch 0
+    val ingest = fixture("ingest") { p =>
+      Dedup.writeLshIndex(docsIn(spark, 0L until 4L), s"$p/index",
+        numPerms = 2)
+      FilePipelines.bloomMergeBatch(docsIn(spark, 4L until 8L), s"$p/state",
+        s"$p/seed", 0L)
+      FilePipelines.bloomMergeBatch(docsIn(spark, 8L until 12L), s"$p/state",
+        s"$p/seed", 1L)
+    }
+    // novel pages, a near-dup of an indexed page, an exact repeat of a
+    // page in the Bloom state and an in-batch repeat
+    enumerateRetry("ingest-admission", ingest)(
+      admit((12L until 15L) ++ Seq(101L, 106L, 112L), 2L))(
+      sink("out", "index/bands", "index/sets")("state")(
+        "out/_committed", "out/_verdicts", "index/_committed"))
+
+    val semantic = fixture("semantic") { p =>
+      Similarity.writeIvfIndex(half(0, 12), ncells = 2, s"$p/index")
+    }
+    enumerateRetry("semantic-admission", semantic) { (s, p) =>
+      import s.implicits._
+      // new vectors, and copies of indexed ones under new ids
+      val copies = vecsIn(s, 0, 3).select(($"vec_id" + 100).as("vec_id"),
+        $"embedding")
+      FilePipelines.semanticAdmissionBatch(
+        vecsIn(s, 12, 18).unionByName(copies), s"$p/index", s"$p/out", 1L)
+    }(sink("out", "index/cells")()(
+      "out/_committed", "out/_verdicts", "index/_committed"))
+  }
+
+  test("bloomMergeBatch converges on retry after a crash at every call") {
+    def merge(ids: Seq[Long], batchId: Long)(s: SparkSession,
+        p: String): Unit =
+      FilePipelines.bloomMergeBatch(docsIn(s, ids), s"$p/state", s"$p/out",
+        batchId)
+    val bloom = fixture("bloom") { p =>
+      merge(0L until 4L, 0L)(spark, p)
+      merge(4L until 8L, 1L)(spark, p)
+    }
+    enumerateRetry("bloom-merge", bloom)(
+      merge(Seq(8L, 9L, 102L, 105L), 2L))(sink("out")("state")())
   }
 }
