@@ -1,7 +1,10 @@
 package graft.fhir
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+
+import java.util.concurrent.atomic.AtomicReference
 
 /** FHIR search front-end (SURVEY B1–B15): parses a search request string
   * ("Patient?gender=male&_sort=birthdate&_count=10") into a DataFrame plan
@@ -31,6 +34,27 @@ import org.apache.spark.sql.functions._
   * and patient-compartment requests (`Patient/{id}/{Type}?params`).
   * Round 8: `_text` (tag-stripped narrative substring) and `_content`
   * (whole-serialized-resource substring via a raw-line scan + semi-join).
+  *
+  * Search session: the engine sizes its store at construction, as the
+  * sum of the optimized `sizeInBytes` of every table and history feed it
+  * reads (cached relations report their materialized size).
+  *  - A store that fits one `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+  *    partition is served from a search session: a clone of the caller's
+  *    session (same runtime confs, functions and cached relations) with
+  *    AQE off and 1 shuffle partition. A request's joins, aggregates and
+  *    final sort are one static job (plus one per broadcast), with no
+  *    stage-materialization jobs, no range-sampling job for the sort, and
+  *    no runtime re-planning that would change the generated code between
+  *    requests. Join strategies come from the static stats of the store
+  *    relations.
+  *  - A larger store is served from the caller's session itself, on the
+  *    caller's settings.
+  * Confs and functions set on the caller after construction do not reach
+  * an engine's clone, except the request-time guards, which read the
+  * caller (`graft.fhir.contentScanMaxBytes`). Engines built over one
+  * caller share its clone while the caller's runtime conf and temporary
+  * functions stay the same; a change to either gives the next engine a
+  * fresh clone.
   */
 class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     rawSource: Option[String => DataFrame] = None,
@@ -38,11 +62,26 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
 
   import FhirSearch._
 
+  private val session: SparkSession =
+    searchSession(spark, tables.values ++ historySource.values)
+
+  /** A caller frame's plan as a frame of the search session. */
+  private def onSession(df: DataFrame): DataFrame =
+    if (session eq spark) df
+    else GraftSqlShims.ofRows(session, df.queryExecution.analyzed)
+
+  private val store: Map[String, DataFrame] =
+    tables.view.mapValues(onSession).toMap
+  private val history: Map[String, DataFrame] =
+    historySource.view.mapValues(onSession).toMap
+  private val rawLines: Option[String => DataFrame] =
+    rawSource.map(_.andThen(onSession))
+
   private def table(t: String): DataFrame =
-    tables.getOrElse(t, sys.error(s"unknown resource type: $t"))
+    store.getOrElse(t, sys.error(s"unknown resource type: $t"))
 
   private def historyTable(t: String): DataFrame =
-    historySource.getOrElse(t, sys.error(s"no version history feed for: $t"))
+    history.getOrElse(t, sys.error(s"no version history feed for: $t"))
 
   /** Bulk export — the reference-delegated `:export` operation
     * (README.md:65 → "fhir-import-export" docs): write every served
@@ -79,9 +118,9 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
   def export(destDir: String, types: Option[Seq[String]] = None,
       since: Option[String] = None,
       typeFilters: Seq[String] = Seq.empty): DataFrame = {
-    import spark.implicits._
-    val exportTypes = types.getOrElse(tables.keys.toSeq).sorted
-    exportTypes.foreach(t => require(tables.contains(t),
+    import session.implicits._
+    val exportTypes = types.getOrElse(store.keys.toSeq).sorted
+    exportTypes.foreach(t => require(store.contains(t),
       s"unknown type in export _type: $t"))
     val filtersByType: Map[String, Seq[String]] = typeFilters.map { f =>
       val t = f.takeWhile(_ != '?')
@@ -121,7 +160,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         else base
       val path = s"$destDir/$t"
       FhirIO.writeNdjson(src, path)
-      val n = FhirIO.readNdjson(spark, path, FhirSchemas.byType(t)).count()
+      val n = FhirIO.readNdjson(session, path, FhirSchemas.byType(t)).count()
       (t, n, path, applied, filtersByType.contains(t))
     }
     rows.toDF("resource_type", "n", "path", "since_applied",
@@ -142,6 +181,15 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     * Result shape: the matched resources' columns, unless _total (a single
     * `total` row), _elements (projected), or _include/_revinclude (rows of
     * (resourceType, id, mode) across types).
+    *
+    * The returned frame belongs to the engine's search session (see the
+    * class doc), not necessarily to the caller's: work built on it runs on
+    * that session's settings (a store below one advisory partition: AQE
+    * off, 1 shuffle partition), a temp view made from it registers in
+    * that session's catalog, and `df.sparkSession.conf` is that session's
+    * conf, shared by every engine that shares the session. To compose
+    * further work on the caller's settings, rebind the plan onto the
+    * caller's session first.
     */
   def search(request: String): DataFrame = {
     // Terminology operations as callable surface (round 20, verdict r19
@@ -224,7 +272,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         params.collectFirst { case ("_since", v) => v }.foreach(s =>
           df = df.filter(col("meta").getField("lastUpdated") >= s))
         df = df.orderBy(col("meta").getField("versionId").cast("int").desc)
-        params.collectFirst { case ("_count", v) => v.toInt }.foreach(n =>
+        params.collectFirst { case ("_count", v) => paging("_count", v, 0) }.foreach(n =>
           df = df.limit(n))
         return df
       case typeHistoryRx(t, rest) =>
@@ -234,7 +282,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
           df = df.filter(col("meta").getField("lastUpdated") >= s))
         df = df.orderBy(col("id"),
           col("meta").getField("versionId").cast("int").desc)
-        params.collectFirst { case ("_count", v) => v.toInt }.foreach(n =>
+        params.collectFirst { case ("_count", v) => paging("_count", v, 0) }.foreach(n =>
           df = df.limit(n))
         return df
       // System-level `GET [base]/_history`: the whole-store feed — one
@@ -246,11 +294,11 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
       // deterministically. `_count` over the union plans as one
       // TakeOrderedAndProject — no global sort materializes.
       case systemHistoryRx(rest) =>
-        require(historySource.nonEmpty,
+        require(history.nonEmpty,
           "system-level _history: no version history feeds registered")
         val params = parseQs(rest)
         val since = params.collectFirst { case ("_since", v) => v }
-        val legs = historySource.keys.toSeq.sorted.map { t =>
+        val legs = history.keys.toSeq.sorted.map { t =>
           val base = since.foldLeft(historyTable(t))((df, s0) =>
             df.filter(col("meta").getField("lastUpdated") >= s0))
           base.select(lit(t).as("resourceType"), col("id"),
@@ -260,7 +308,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         var df = legs.reduce(_ unionByName _)
           .orderBy(col("last_updated").desc, col("resourceType"),
             col("id"), col("version_id").cast("int").desc)
-        params.collectFirst { case ("_count", v) => v.toInt }.foreach(n =>
+        params.collectFirst { case ("_count", v) => paging("_count", v, 0) }.foreach(n =>
           df = df.limit(n))
         return df
       case _ => ()
@@ -282,7 +330,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         v.split(",").toSeq }
         .getOrElse(throw new IllegalArgumentException(
           "system-level search requires _type=a,b"))
-      types.foreach(t => require(tables.contains(t), s"unknown type in _type: $t"))
+      types.foreach(t => require(store.contains(t), s"unknown type in _type: $t"))
       val shared = params.filterNot(_._1 == "_type")
         .map { case (k, v) => s"$k=$v" }.mkString("&")
       val legs = types.map { t =>
@@ -343,8 +391,11 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     // resource (the FHIR "search the whole content" param; matching the
     // stored serialization is the documented semantics here). Planned as
     // a raw-line scan of the store → matching ids → left-semi join back
-    // to the parsed frame: at scale both sides are one pass, the id list
-    // is small, and AQE turns the semi-join into a broadcast.
+    // to the parsed frame: at scale both sides are one pass and the id
+    // list is small. In a store below one advisory partition the static
+    // stats of the raw relation pick the join (a broadcast under the
+    // broadcast threshold); above it, AQE broadcasts the id list by its
+    // runtime size.
     //
     // SIZE GUARD: _content is definitionally a full scan of the raw
     // store — no param path to push down, no index to prune. Fine at
@@ -356,7 +407,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     // (default 10 GiB); over it, the query fails loudly with the knob to
     // raise — error, not a silent cap, the engine's standing contract.
     controls.collect { case ("_content", v) => v }.foreach { v =>
-      val raw = rawSource.getOrElse(sys.error(
+      val raw = rawLines.getOrElse(sys.error(
         "_content requires a raw-source provider (FhirSearch.overFixtures)"))(resType)
       val cap = BigInt(spark.conf.get("graft.fhir.contentScanMaxBytes",
         (10L << 30).toString))
@@ -437,8 +488,10 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         // a ref to another type that happens to share an id must not
         // revinclude. refSources explodes array-valued params, so one
         // resource referencing two matches still revincludes once
-        // (semi-join); the matched side is result-set-sized and AQE
-        // broadcasts it unforced.
+        // (semi-join); the matched side is result-set-sized and is never
+        // forced to broadcast: in a store below one advisory partition the
+        // static stats of its store relation pick the join, above it AQE
+        // broadcasts it by its runtime size.
         val matchedRefs = df.select(
           concat(lit(resType + "/"), col("id")).as("_mref"))
         refSources(t, refParam, table(t))
@@ -525,7 +578,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         case ("_revinclude", "*") =>
           // FHIR wildcard: anything that could point at a matched
           // resource — ONE merged leg across every referencing type
-          val ts = tables.keys.toSeq.sorted
+          val ts = store.keys.toSeq.sorted
             .filter(referenceParams(_).nonEmpty)
           if (ts.isEmpty) Seq() else Seq(revincludeAllMerged(ts))
         case ("_revinclude", spec) =>
@@ -605,10 +658,15 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     // sort a row_number() pager degenerates to. Deep paging at scale
     // should switch to keyset continuation on the (sort keys, id) total
     // order; _page is the reference surface's offset-style contract.
-    val pageSize = controls.collectFirst { case ("_count", v) => v.toInt }
-    val page = controls.collectFirst { case ("_page", v) => v.toInt }.getOrElse(1)
+    val pageSize = controls.collectFirst { case ("_count", v) => paging("_count", v, 0) }
+    val page = controls.collectFirst { case ("_page", v) => paging("_page", v, 1) }
+      .getOrElse(1)
     pageSize.foreach { sz =>
-      out = out.offset((page - 1) * sz).limit(sz)
+      val skip = try Math.multiplyExact(page - 1, sz) catch {
+        case _: ArithmeticException => throw new IllegalArgumentException(
+          s"_page=$page of _count=$sz skips past ${Int.MaxValue} rows")
+      }
+      out = out.offset(skip).limit(sz)
     }
 
     // B13 _elements projection
@@ -655,14 +713,16 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
       // No broadcast hint: the chain target is a FILTERED scan whose
       // selectivity the planner can't know here — an unselective chain
       // (e.g. `subject.name=co e`) is corpus-sized at 100 TB and would
-      // OOM a forced broadcast. AQE still picks BHJ when the filtered
-      // side turns out small at runtime.
+      // OOM a forced broadcast. In a store below one advisory partition
+      // the static stats of the target relation pick the join (BHJ under
+      // the broadcast threshold); above it, AQE picks BHJ when the
+      // filtered side turns out small at runtime.
       //
       // Array-valued ref params (ServiceRequest.specimen) chain through
       // an exploded (id, _ref) semi-join — still equi-joins end to end
       // (never an array-contains theta join, which would plan as a
       // nested-loop at scale); the matching-id side is result-set-sized
-      // and AQE broadcasts it unforced.
+      // and its join is picked the same way, never forced.
       if (ArrayRefParams((resType, refParam))) {
         val ids = refSources(resType, refParam, df)
           .join(target, col("_ref") === col("_target_ref"), "left_semi")
@@ -753,7 +813,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     val filterSpecs =
       if (!hasField(inc, "inc", "filter")) Seq()
       else {
-        import spark.implicits._
+        import session.implicits._
         inc
           .select(col("inc").getField("system").as("system"),
             explode(col("inc").getField("filter")).as("f"))
@@ -821,7 +881,7 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
       val roots = r.getAs[scala.collection.Seq[Row]](0)
       if (roots != null) roots.foreach(walk(None, _))
     }
-    import spark.implicits._
+    import session.implicits._
     rows.toSeq.toDF("code", "display", "parent_code_opt", "child_codes")
       .select(lit(system).as("system"), col("code"), col("display"),
         col("parent_code_opt").as("parent_code"), col("child_codes"))
@@ -1396,6 +1456,14 @@ object FhirSearch {
     case _ => sys.error(s"unknown chain $resType.$refParam")
   }
 
+  /** A paging value (`_count`, `_page`): an integer of at least `min`;
+    * anything else is refused naming the parameter, before it can plan
+    * a negative limit or offset.
+    */
+  private def paging(name: String, v: String, min: Int): Int =
+    v.toIntOption.filter(_ >= min).getOrElse(throw new IllegalArgumentException(
+      s"$name must be an integer >= $min, got '$v'"))
+
   /** "Type?k=v&k2=v2" → (Type, ordered params). Empty segments (stray
     * `&`) are dropped; a valueless key raises a descriptive error rather
     * than a MatchError.
@@ -1412,6 +1480,46 @@ object FhirSearch {
         }
       }).getOrElse(Seq())
     (t, params)
+  }
+
+  /** The search session of each caller session, with the caller's
+    * runtime conf and temporary functions it was cloned at. Engines built
+    * per request share it instead of each cloning (and registering a
+    * listener bus for) its own. A changed conf or function replaces it;
+    * the old clone lives on with the engines and frames that hold it, and
+    * Spark's context cleaner drops its listener bus once they are gone.
+    */
+  private val searchSessions =
+    new graft.util.SessionCache[AtomicReference[(Any, SparkSession)]]
+
+  /** The session a store is served from (see the class doc): a clone with
+    * AQE off and 1 shuffle partition when the store fits one advisory
+    * partition, otherwise the caller's session itself.
+    */
+  private def searchSession(spark: SparkSession,
+      store: Iterable[DataFrame]): SparkSession = {
+    val conf = GraftSqlShims.sqlConf(spark)
+    val bytes = store.iterator
+      .map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+    if (bytes > conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) spark
+    else {
+      // the full conf and each temporary function's builder, compared
+      // by value and by reference: a function re-registered under the
+      // same name is a new builder
+      val state = (spark.conf.getAll.toSeq.sorted,
+        GraftSqlShims.temporaryFunctions(spark))
+      searchSessions.getOrElseUpdate(spark, "static")(
+          new AtomicReference[(Any, SparkSession)]((None, spark)))
+        .updateAndGet { cur =>
+          if (cur._1 == state) cur
+          else {
+            val s = GraftSqlShims.cloneSession(spark)
+            s.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, false)
+            s.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, 1L)
+            (state, s)
+          }
+        }._2
+    }
   }
 
   /** Build a search engine over the NDJSON fixture tables (relations are

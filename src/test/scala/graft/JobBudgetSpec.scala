@@ -1,0 +1,98 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.GraftTestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.col
+
+import graft.fhir.{FhirSearch, SearchShapes}
+import graft.operators.{Dedup, Similarity, Sketches}
+import graft.streaming.FilePipelines
+
+/** Job budgets: the exact number of Spark jobs the engine's per-request
+  * and per-batch paths launch at fixture scale. A job count is a property
+  * of the plan, not of the host's load, so a change that adds driver
+  * round trips (an AQE stage job, a range-sampling job, an eager count)
+  * fails here deterministically.
+  *
+  * The counts are fixture-scale: `perfbench`'s `corpus_pipeline` reads 12
+  * jobs per admitted segment through the streaming sink, the same body.
+  */
+class JobBudgetSpec extends SparkSpec {
+
+  private val started = new AtomicInteger
+  private lazy val listener = {
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
+
+  /** Jobs launched while `body` runs (suites run one at a time). */
+  private def jobsOf(body: => Unit): Int = {
+    listener
+    GraftTestBus.drain(spark.sparkContext)
+    val before = started.get
+    body
+    GraftTestBus.drain(spark.sparkContext)
+    started.get - before
+  }
+
+  /** Per request over the fixture store: one static job, plus one per
+    * broadcast (the chain's target and the revinclude's matched set).
+    */
+  private val searchBudget = Map(
+    "read" -> 1, "everything" -> 1, "filter_token_date" -> 1,
+    "filter_string_date" -> 1, "filter_reference_token" -> 1, "chain" -> 2,
+    "include" -> 1, "revinclude" -> 2, "sort_page" -> 1, "total" -> 1)
+
+  test("FHIR search: jobs per request, one request per template shape") {
+    val eng = FhirSearch.overFixtures(spark, SearchShapes.Dir)
+    val got = SearchShapes.All.map { case (shape, (req, _)) =>
+      shape -> jobsOf(eng.search(req).collect(): Unit)
+    }.toMap
+    assert(got == searchBudget)
+  }
+
+  private def tmp(tag: String): String = {
+    val d = Files.createTempDirectory(s"graft_budget_$tag").toFile.getAbsolutePath
+    graft.util.TempFixtures.deleteOnExit(d)
+    d
+  }
+
+  test("admission micro-batch: 12 jobs per batch") {
+    import spark.implicits._
+    val root = tmp("admit")
+    val hist = (0L until 8L).map(i =>
+      (i, s"the shared crawl boilerplate line number ${i % 4} of page $i"))
+      .toDF("doc_id", "text")
+    Dedup.writeLshIndex(hist, s"$root/idx")
+    Sketches.bloomBits(hist, col("text")).write.json(s"$root/state/epoch=-1")
+    // novel pages, a near-dup of an indexed page and an exact repeat
+    val batch = Seq(
+      (20L, "a page nobody has crawled before about river boats"),
+      (21L, "another novel page about mountain weather stations"),
+      (22L, "the shared crawl boilerplate line number 1 of page 9"),
+      (23L, "the shared crawl boilerplate line number 2 of page 2"))
+      .toDF("doc_id", "text")
+    val n = jobsOf(FilePipelines.ingestAdmissionBatch(batch, s"$root/idx",
+      s"$root/state", s"$root/out", 0L))
+    assert(n == 12)
+  }
+
+  test("committed IVF append: 5 jobs per append") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val vecs = (0L until 24L).map(i => (i, Array.fill(4)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val dir = tmp("ivf")
+    Similarity.writeIvfIndex(vecs.filter($"vec_id" < 12), ncells = 2, dir)
+    val n = jobsOf(assert(Similarity.appendToIvfIndexCommitted(spark, dir,
+      vecs.filter($"vec_id" >= 12), 1L)))
+    assert(n == 5)
+  }
+}
