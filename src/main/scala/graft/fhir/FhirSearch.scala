@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
-import java.util.concurrent.atomic.AtomicReference
-
 /** FHIR search front-end (SURVEY B1–B15): parses a search request string
   * ("Patient?gender=male&_sort=birthdate&_count=10") into a DataFrame plan
   * over per-type resource frames.
@@ -49,12 +47,10 @@ import java.util.concurrent.atomic.AtomicReference
   *    relations.
   *  - A larger store is served from the caller's session itself, on the
   *    caller's settings.
-  * Confs and functions set on the caller after construction do not reach
-  * an engine's clone, except the request-time guards, which read the
-  * caller (`graft.fhir.contentScanMaxBytes`). Engines built over one
-  * caller share its clone while the caller's runtime conf and temporary
-  * functions stay the same; a change to either gives the next engine a
-  * fresh clone.
+  * The clone and its lifecycle are [[graft.util.Regime]]'s: engines built
+  * over one unchanged caller share it. The request-time guards read the
+  * caller (`graft.fhir.contentScanMaxBytes`), so they follow confs set
+  * after construction.
   */
 class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
     rawSource: Option[String => DataFrame] = None,
@@ -65,10 +61,8 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
   private val session: SparkSession =
     searchSession(spark, tables.values ++ historySource.values)
 
-  /** A caller frame's plan as a frame of the search session. */
   private def onSession(df: DataFrame): DataFrame =
-    if (session eq spark) df
-    else GraftSqlShims.ofRows(session, df.queryExecution.analyzed)
+    graft.util.Regime.on(session, df)
 
   private val store: Map[String, DataFrame] =
     tables.view.mapValues(onSession).toMap
@@ -450,10 +444,12 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
       case "_lastUpdated" => col("meta").getField("lastUpdated")
       case other => col(other)
     }
+    // id last makes the order total, for deterministic paging
     val orderCols = sortKeys.map {
       case k if k.startsWith("-") => sortCol(k.drop(1)).desc_nulls_last
       case k => sortCol(k).asc_nulls_last
-    } :+ col("id").asc // total order for deterministic paging
+    } ++ (if (sortKeys.exists(_.stripPrefix("-") == "id")) Nil
+      else Seq(col("id").asc))
 
     // B12 _total=accurate (with _count=0: count only — the reference's own
     // acceptance query, README.md:99-103); _summary=count is the same
@@ -1482,44 +1478,19 @@ object FhirSearch {
     (t, params)
   }
 
-  /** The search session of each caller session, with the caller's
-    * runtime conf and temporary functions it was cloned at. Engines built
-    * per request share it instead of each cloning (and registering a
-    * listener bus for) its own. A changed conf or function replaces it;
-    * the old clone lives on with the engines and frames that hold it, and
-    * Spark's context cleaner drops its listener bus once they are gone.
-    */
-  private val searchSessions =
-    new graft.util.SessionCache[AtomicReference[(Any, SparkSession)]]
-
-  /** The session a store is served from (see the class doc): a clone with
-    * AQE off and 1 shuffle partition when the store fits one advisory
-    * partition, otherwise the caller's session itself.
+  /** The session a store is served from (see the class doc): AQE off
+    * and 1 shuffle partition when the store fits one advisory partition,
+    * otherwise the caller's session itself.
     */
   private def searchSession(spark: SparkSession,
       store: Iterable[DataFrame]): SparkSession = {
-    val conf = GraftSqlShims.sqlConf(spark)
     val bytes = store.iterator
       .map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
-    if (bytes > conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) spark
-    else {
-      // the full conf and each temporary function's builder, compared
-      // by value and by reference: a function re-registered under the
-      // same name is a new builder
-      val state = (spark.conf.getAll.toSeq.sorted,
-        GraftSqlShims.temporaryFunctions(spark))
-      searchSessions.getOrElseUpdate(spark, "static")(
-          new AtomicReference[(Any, SparkSession)]((None, spark)))
-        .updateAndGet { cur =>
-          if (cur._1 == state) cur
-          else {
-            val s = GraftSqlShims.cloneSession(spark)
-            s.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, false)
-            s.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, 1L)
-            (state, s)
-          }
-        }._2
-    }
+    if (bytes > GraftSqlShims.sqlConf(spark)
+        .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)) spark
+    else graft.util.Regime.session(spark, Map(
+      SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false",
+      SQLConf.SHUFFLE_PARTITIONS.key -> "1"))
   }
 
   /** Build a search engine over the NDJSON fixture tables (relations are

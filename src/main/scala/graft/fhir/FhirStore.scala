@@ -76,7 +76,7 @@ object FhirStore {
     */
   def updateCreate(spark: SparkSession, feedDir: String, batch: DataFrame,
       batchId: Long, lastUpdated: String): Boolean =
-    CommittedAppend.run(spark, feedDir, batchId) { stage =>
+    CommittedAppend.run(spark, feedDir, batchId, batch) { (batch, stage) =>
       // scale-adaptive staged width (the outFiles policy of the other
       // committed appends, r21): a micro-batch still lands one id-sorted
       // file, but a backfill-sized batch encodes core-wide instead of
@@ -88,8 +88,8 @@ object FhirStore {
       val b = batch.cache()
       try {
         CommittedAppend.stagedSlices(
-            updateCreateRows(feedWithout(spark, feedDir, batchId), b,
-              lastUpdated),
+            updateCreateRows(feedWithout(b.sparkSession, feedDir, batchId),
+              b, lastUpdated),
             CommittedAppend.outFilesFor(spark, b.count()), col("id"))
           .sortWithinPartitions(col("id"))
           .write.mode("overwrite").parquet(stage)

@@ -564,8 +564,8 @@ object Dedup {
       path: String, newDocs: DataFrame, batchId: Long, n: Int = 3,
       numPerms: Int = 32, rowsPerBand: Int = 2,
       family: MinHashFamily = FastFamily, setsFiles: Int = 0): Boolean =
-    graft.util.CommittedAppend.run(spark, path, batchId) { stage =>
-      val sh = newDocs.select(col("doc_id"),
+    graft.util.CommittedAppend.run(spark, path, batchId, newDocs) { (docs, stage) =>
+      val sh = docs.select(col("doc_id"),
         family.shingles(col("text"), n).as("sh")).cache()
       try {
         // scale-adaptive width (one count on the cached batch frame —

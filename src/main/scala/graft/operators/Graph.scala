@@ -65,9 +65,8 @@ object Graph {
     // hangs off the raw caller edges, and the caller's edge plan may be
     // the expensive part (a kNN build) — referencing it here would
     // compute it a second time just for the probe.
-    val hasDangling = nodes
-      .join(e.select(col("src").as("node")), Seq("node"), "left_anti")
-      .limit(1).count() > 0
+    val hasDangling = !graft.util.Regime.atMost(nodes
+      .join(e.select(col("src").as("node")), Seq("node"), "left_anti"), 0)
     // n as a broadcast 1-row frame — the plan stays lazy, no driver count
     val nRow = broadcast(nodes.agg(count(lit(1)).cast("double").as("n")))
     // (node, n) off the CACHED node list: every iteration's "all nodes"

@@ -76,8 +76,10 @@ object Layout {
     * alternatives: `coalesce(n)` can only merge (and needs a magic n),
     * `repartition(n)` shuffles to a FIXED n blind to data size — the
     * rebalance hint lets AQE both merge small and SPLIT oversized
-    * shuffle partitions to the advisory byte size at runtime.
-    * Returns (filesBefore, filesAfter).
+    * shuffle partitions to the advisory byte size at runtime. The pass
+    * runs in the regime of the caller with `advisory` as AQE's advisory
+    * partition size ([[graft.util.Regime]]), never by setting it on the
+    * caller. Returns (filesBefore, filesAfter).
     */
   def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
       outDir: String, advisory: String = "128MB"): (Long, Long) = {
@@ -88,15 +90,9 @@ object Layout {
         .count(f => f.getPath.getName.endsWith(".parquet")).toLong
     }
     val before = dataFiles(inDir)
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, advisory)
-      spark.read.parquet(inDir).hint("rebalance")
-        .write.mode("overwrite").parquet(outDir)
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val settings = Map("spark.sql.adaptive.advisoryPartitionSizeInBytes" -> advisory)
+    graft.util.Regime.run(spark, settings)() { (s, _) =>
+      s.read.parquet(inDir).hint("rebalance").write.mode("overwrite").parquet(outDir)
     }
     (before, dataFiles(outDir))
   }

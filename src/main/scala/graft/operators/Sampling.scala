@@ -231,9 +231,8 @@ object Sampling {
       val benchSh = benchmark
         .select(explode(graft.operators.Dedup.shingleHashes(text, n)).as("sh"))
         .distinct()
-      val small =
-        benchSh.limit(benchBroadcastCap + 1).count() <= benchBroadcastCap
-      if (small) pos.join(broadcast(benchSh), "sh")
+      if (graft.util.Regime.atMost(benchSh, benchBroadcastCap))
+        pos.join(broadcast(benchSh), "sh")
       else pos.join(benchSh, "sh")
     }
 
@@ -260,7 +259,7 @@ object Sampling {
       threshold: Double, scale: Int = 5,
       benchBroadcastCap: Int = 1 << 16,
       ncells: Int = 16, nassign: Int = 2): DataFrame = {
-    val small = benchmark.limit(benchBroadcastCap + 1).count() <= benchBroadcastCap
+    val small = graft.util.Regime.atMost(benchmark, benchBroadcastCap)
     val maxed =
       if (small) {
         val benchArr = benchmark.agg(collect_list(col("embedding")).as("_bench"))

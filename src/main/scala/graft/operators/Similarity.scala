@@ -122,7 +122,7 @@ object Similarity {
     // window shape this replaces shuffled nq·ncells rows per probe plan
     val probeCellRows = probes.select(col("query_id"), col("qvec"),
       explode(probeCells(cents, "qvec", nprobe)).as("cell"))
-    val small = probes.limit(probeBroadcastCap + 1).count() <= probeBroadcastCap
+    val small = graft.util.Regime.atMost(probes, probeBroadcastCap)
     val candidates =
       if (small) assigned.join(broadcast(probeCellRows), Seq("cell"))
       // the merge hint PINS the over-cap regime to a shuffle join: the
@@ -307,9 +307,9 @@ object Similarity {
     */
   def appendToIvfIndexCommitted(spark: SparkSession, path: String,
       newVecs: DataFrame, batchId: Long): Boolean =
-    graft.util.CommittedAppend.run(spark, path, batchId) { stage =>
-      val centers = centersOf(readIvfCentroids(spark, path))
-      cellLayout(newVecs.select(col("vec_id"), col("embedding"))
+    graft.util.CommittedAppend.run(spark, path, batchId, newVecs) { (vecs, stage) =>
+      val centers = centersOf(readIvfCentroids(vecs.sparkSession, path))
+      cellLayout(vecs.select(col("vec_id"), col("embedding"))
           .withColumn("cell",
             element_at(assignCells(centers, nassign = 1, euclid = true), 1)))
         .mode("overwrite").parquet(s"$stage/cells")
@@ -502,7 +502,7 @@ object Similarity {
     // window shape this replaces shuffled nq·ncells rows per probe plan
     val probes = queries.select(col("query_id"), col("qvec"),
       explode(probeCells(cents, "qvec", nprobe)).as("cell"))
-    val small = queries.limit(queryBroadcastCap + 1).count() <= queryBroadcastCap
+    val small = graft.util.Regime.atMost(queries, queryBroadcastCap)
     val candidates =
       if (small) assigned.join(broadcast(probes), Seq("cell"))
       // merge hint: pin the over-cap regime to a shuffle join (see
@@ -1390,7 +1390,7 @@ object Similarity {
     // window shape this replaces shuffled nq·ncells rows per probe plan
     val probes = queries.select(col("query_id"), col("qvec"),
       explode(probeCells(cents, "qvec", nprobe)).as("cell"))
-    val small = queries.limit(queryBroadcastCap + 1).count() <= queryBroadcastCap
+    val small = graft.util.Regime.atMost(queries, queryBroadcastCap)
     val candidates =
       if (small) codes.join(broadcast(probes), Seq("cell"))
       // merge hint: pin the over-cap regime to a shuffle join (see

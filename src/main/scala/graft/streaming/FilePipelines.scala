@@ -91,14 +91,14 @@ object FilePipelines {
   def bloomMergeBatch(batch: DataFrame, stateDir: String, outDir: String,
       batchId: Long, kHashes: Int = 4, mBits: Int = 32768): Unit =
     // fixed micro-batch plan, bounded shuffles — skip AQE's per-exchange
-    // stage-materialization jobs ([[graft.util.Tuning.microBatch]])
-    graft.util.Tuning.microBatch(batch.sparkSession) {
-      val bloom = graft.util.BloomState.epoch(batch.sparkSession, stateDir,
+    // stage-materialization jobs ([[graft.util.Regime.microBatch]])
+    microBatch(batch) { b =>
+      val bloom = graft.util.BloomState.epoch(b.sparkSession, stateDir,
         batchId)
-      bloom.probe(batch, col("doc_id"), col("text"), kHashes, mBits)
+      bloom.probe(b, col("doc_id"), col("text"), kHashes, mBits)
         .withColumnRenamed("id", "doc_id")
         .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      bloom.publish(batch, col("text"), kHashes, mBits)
+      bloom.publish(b, col("text"), kHashes, mBits)
     }
 
   /** Streaming Bloom novelty ingest: NDJSON document segments land in
@@ -116,6 +116,20 @@ object FilePipelines {
         .json(inDir), checkpointDir) {
       (b, id) => bloomMergeBatch(b, stateDir, outDir, id)
     }
+
+  /** Run `body` on `batch` rebound into its session's
+    * [[graft.util.Regime.microBatch]] regime, in a
+    * [[graft.util.Scratch.scoped]] release of the regime's session:
+    * internal caches operators register during the batch (e.g.
+    * probeLshIndex's band table) are garbage the moment its sinks commit,
+    * and a continuous stream would otherwise accrete one per batch.
+    */
+  private def microBatch[T](batch: DataFrame)(body: DataFrame => T): T = {
+    val spark = batch.sparkSession
+    graft.util.Regime.run(spark, graft.util.Regime.microBatch(spark))(batch) {
+      case (s, Seq(b)) => graft.util.Scratch.scoped(s)(body(b))
+    }
+  }
 
   /** Run `f` on each micro-batch of `source` with its batch id (at least
     * once, checkpointed in `checkpointDir`) over the input present at
@@ -164,9 +178,7 @@ object FilePipelines {
     * TABLE STATE.
     */
   def upsertBatch(batch: DataFrame, targetDir: String): Unit =
-    graft.util.Tuning.microBatch(batch.sparkSession) {
-      upsertBatchBody(batch, targetDir)
-    }
+    microBatch(batch)(upsertBatchBody(_, targetDir))
 
   private def upsertBatchBody(batch: DataFrame, targetDir: String): Unit = {
     val spark = batch.sparkSession
@@ -276,16 +288,16 @@ object FilePipelines {
         graft.operators.Dedup.FastFamily,
       kHashes: Int = 4, mBits: Int = 32768): Unit = {
     import graft.operators.Dedup
-    val spark = batch0.sparkSession
     // driver-read state, read once a step needs it: the probe rides as
     // a register-array projection inside the verdict plan and the publish
     // unions a local relation — no bloom-side scan stage, broadcast
     // build, or per-id aggregation exchange per micro-batch
-    lazy val bloom = graft.util.BloomState.epoch(spark, stateDir, batchId)
+    lazy val bloom = graft.util.BloomState.epoch(batch0.sparkSession,
+      stateDir, batchId)
     admitBatch(batch0.select(col("doc_id"), col("text")), "doc_id", outDir,
         batchId, ingestVerdictSchema) { batch =>
-      val near = Dedup.probeLshIndex(spark, indexDir, batch, threshold,
-          n, numPerms, rowsPerBand, family = family)
+      val near = Dedup.probeLshIndex(batch.sparkSession, indexDir, batch,
+          threshold, n, numPerms, rowsPerBand, family = family)
         .groupBy(col("q_id").as("doc_id"))
         .agg(round(max(col("jaccard")), 6).as("best_jaccard"))
       // the probe is a PROJECTION of the cached batch (one row per batch
@@ -302,9 +314,9 @@ object FilePipelines {
       // the observed admit count sizes the append's staging width with
       // no count job of its own; a replay that skipped the verdict write
       // passes 0, and the append counts (rare path)
-      Dedup.appendToLshIndexCommitted(spark, indexDir, admitted, batchId,
-        n, numPerms, rowsPerBand, family, setsFiles = admits.fold(0)(
-          graft.util.CommittedAppend.outFilesFor(spark, _))): Unit
+      Dedup.appendToLshIndexCommitted(batch.sparkSession, indexDir, admitted,
+        batchId, n, numPerms, rowsPerBand, family, setsFiles = admits.fold(0)(
+          graft.util.CommittedAppend.outFilesFor(batch.sparkSession, _))): Unit
       bloom.publish(batch, col("text"), kHashes, mBits)
     }
   }
@@ -337,28 +349,24 @@ object FilePipelines {
     * admitted rows, given the admit count observed on this attempt's
     * verdict write (None when a replay found the verdicts frozen).
     *
-    * `batch` is cached for the batch's life, and the whole body runs with
-    * AQE off ([[graft.util.Tuning.microBatch]] — the r22 event-log
-    * profile: stage-materialization jobs were most of the ~27 jobs per
-    * batch) in a [[graft.util.Scratch.scoped]] release: internal caches
-    * operators register during the batch (e.g. probeLshIndex's band
-    * table) are garbage the moment its sinks commit — a CONTINUOUS
-    * ingest would otherwise accrete one per micro-batch forever. Scoped,
-    * not a blanket release: other pipelines' session caches stay.
+    * `batch` is cached for the batch's life, and the whole body runs in
+    * the [[graft.util.Regime.microBatch]] regime (stage-materialization
+    * jobs were most of the ~27 jobs per batch with AQE on): both steps
+    * get frames of that regime's session and must read through it, and
+    * the scratch caches the batch registers are released after it
+    * ([[microBatch]]).
     */
   private def admitBatch(batch0: DataFrame, key: String, outDir: String,
       batchId: Long, verdictSchema: StructType)(
       verdicts: DataFrame => DataFrame)(
       land: (DataFrame, DataFrame, Option[Long]) => Unit): Unit = {
     import org.apache.hadoop.fs.Path
-    val spark = batch0.sparkSession
     val fs = new Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileSystem(batch0.sparkSession.sparkContext.hadoopConfiguration)
     val committed = new Path(s"$outDir/_committed/batch-$batchId")
     if (fs.exists(committed)) return
-    graft.util.Tuning.microBatch(spark) {
-    graft.util.Scratch.scoped(spark) {
-      val batch = batch0.cache()
+    microBatch(batch0) { batch1 =>
+      val batch = batch1.cache()
       try {
         val verdictDir = s"$outDir/batch=$batchId"
         val verdictMark = new Path(s"$outDir/_verdicts/batch-$batchId")
@@ -374,13 +382,12 @@ object FilePipelines {
             case l: java.lang.Long => l.longValue() }.getOrElse(0L))
         }
         land(batch, batch.join(
-          spark.read.schema(verdictSchema).parquet(verdictDir)
+          batch.sparkSession.read.schema(verdictSchema).parquet(verdictDir)
             .filter(col("admit")).select(key),
           key), admits)
         fs.mkdirs(committed.getParent)
         fs.create(committed, true).close()
       } finally { batch.unpersist(); () }
-    }
     }
   }
 
@@ -522,13 +529,12 @@ object FilePipelines {
   def semanticAdmissionBatch(batch0: DataFrame, indexDir: String,
       outDir: String, batchId: Long, threshold: Double = 0.9,
       nprobe: Int = 2): Unit = {
-    val spark = batch0.sparkSession
     admitBatch(batch0.select(col("vec_id"), col("embedding")), "vec_id",
-        outDir, batchId, semanticVerdictSchema)(
-      semanticVerdicts(spark, indexDir, _, threshold, nprobe)) {
-      (_, admitted, _) =>
-        graft.operators.Similarity.appendToIvfIndexCommitted(spark,
-          indexDir, admitted, batchId): Unit
+        outDir, batchId, semanticVerdictSchema)(batch =>
+      semanticVerdicts(batch.sparkSession, indexDir, batch, threshold,
+        nprobe)) { (_, admitted, _) =>
+      graft.operators.Similarity.appendToIvfIndexCommitted(
+        admitted.sparkSession, indexDir, admitted, batchId): Unit
     }
   }
 
@@ -570,7 +576,7 @@ object FilePipelines {
     // rows per micro-batch verdict plan
     val probes = queries.select(col("query_id"), col("qvec"),
       explode(Similarity.probeCells(cents, "qvec", nprobe)).as("cell"))
-    val small = batch.limit(probeBroadcastCap + 1).count() <= probeBroadcastCap
+    val small = graft.util.Regime.atMost(batch, probeBroadcastCap)
     val candidates =
       if (small) assigned.join(broadcast(probes), Seq("cell"))
       else assigned.join(probes, Seq("cell"))
@@ -641,24 +647,23 @@ object FilePipelines {
     */
   def packedDeliveryBatch(batch: DataFrame, storeDir: String,
       batchId: Long, seqLen: Int = 256, outFiles: Int = 0): Boolean = {
-    val spark = batch.sparkSession
-    // scoped: packSequencesGlobal Scratch-caches its ranged frame; a
-    // continuous delivery would accrete one cache per micro-batch
-    graft.util.Tuning.microBatch(spark) {
-    graft.util.Scratch.scoped(spark) {
+    // packSequencesGlobal Scratch-caches its ranged frame, released with
+    // the micro-batch
+    microBatch(batch) { b =>
+      val spark = b.sparkSession
       // the batch may be an EXPENSIVE plan (a whole curation funnel, not
       // just a file read), so the adaptive-width row count must not
       // recompute it: cache first — the count fills the cache the
       // packing pass then consumes, keeping the funnel at ONE execution
       val docs = graft.util.Scratch.cached(
-        batch.select(col("doc_id"), col("text")))
+        b.select(col("doc_id"), col("text")))
       // width from the batch's own document count (packed-sequence rows
       // are <= document rows at any seqLen above the mean doc length, so
       // this over-provisions slightly, never starves): a micro-batch
       // delivers one file per epoch, a backfill packs core-wide
       val n = if (outFiles > 0) outFiles
         else graft.util.CommittedAppend.outFilesFor(spark, docs.count())
-      graft.util.CommittedAppend.run(spark, storeDir, batchId) { stage =>
+      graft.util.CommittedAppend.run(spark, storeDir, batchId, docs) { (docs, stage) =>
         graft.util.CommittedAppend.stagedSlices(
             graft.operators.Sampling.packSequencesGlobal(
               docs, col("doc_id"), col("text"), seqLen),
@@ -666,7 +671,6 @@ object FilePipelines {
           .sortWithinPartitions("seq_id", "doc_key")
           .write.mode("overwrite").parquet(s"$stage/epoch=$batchId")
       }
-    }
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Exactly-once batch APPENDS into a partitioned parquet layout, for
   * at-least-once schedulers (foreachBatch, retrying crons) that must be
@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * [[graft.operators.Dedup.appendToLshIndexCommitted]] and
   * [[graft.operators.Similarity.appendToIvfIndexCommitted]].
   *
-  * Caller contract: `stageWrites(stagingDir)` writes the batch's rows
-  * CONTENT-DETERMINISTICALLY in mode(overwrite) under `stagingDir`,
+  * Caller contract: `stageWrites(batch, stagingDir)` writes the batch's
+  * rows CONTENT-DETERMINISTICALLY in mode(overwrite) under `stagingDir`,
   * mirroring the live tree's relative layout (e.g.
   * `<stage>/cells/cell=X/…` for a live `<root>/cells/cell=X/…`).
   * Content-deterministic means a retry regenerates the same ROWS under
@@ -97,13 +97,17 @@ object CommittedAppend {
       keys: org.apache.spark.sql.Column*): org.apache.spark.sql.DataFrame =
     if (n <= 1) df.repartition(1) else df.repartitionByRange(n, keys: _*)
 
-  def run(spark: SparkSession, root: String, batchId: Long)(
-      stageWrites: String => Unit): Boolean =
-    // a committed append stages micro-batch-sized content by contract:
-    // its staging write, fingerprint read-back and promote are fixed,
-    // bounded plans — AQE's per-exchange stage-materialization jobs are
-    // pure scheduler overhead here ([[graft.util.Tuning.microBatch]])
-    Tuning.microBatch(spark) { runBody(spark, root, batchId)(stageWrites) }
+  /** Land `batch` as batch `batchId` of `root`. A committed append
+    * stages micro-batch-sized content by contract: its staging write,
+    * fingerprint read-back and promote are fixed, bounded plans, so
+    * `stageWrites` runs in the [[Regime.microBatch]] regime and gets
+    * `batch` rebound onto it — every read it makes goes through that
+    * frame's session.
+    */
+  def run(spark: SparkSession, root: String, batchId: Long, batch: DataFrame)(
+      stageWrites: (DataFrame, String) => Unit): Boolean =
+    Regime.run(spark, Regime.microBatch(spark))(batch) { case (s, Seq(b)) =>
+      runBody(s, root, batchId)(stageWrites(b, _)) }
 
   private def runBody(spark: SparkSession, root: String, batchId: Long)(
       stageWrites: String => Unit): Boolean = {

@@ -55,11 +55,11 @@ object IndexStore {
   def appendCommitted(spark: SparkSession, root: String, kind: Kind,
       newVecs: DataFrame, batchId: Long, outFiles: Int)(
       encode: DataFrame => DataFrame): Boolean =
-    CommittedAppend.run(spark, root, batchId) { stage =>
+    CommittedAppend.run(spark, root, batchId, newVecs) { (batch, stage) =>
       // cache before the adaptive-width count: the batch may be a derived
       // plan, and the count should fill the cache the encode consumes,
       // not add a second execution of it
-      val vecs = newVecs.select(col("vec_id"), col("embedding")).cache()
+      val vecs = batch.select(col("vec_id"), col("embedding")).cache()
       try {
         val n = if (outFiles > 0) outFiles
           else CommittedAppend.outFilesFor(spark, vecs.count())
@@ -80,8 +80,8 @@ object IndexStore {
     */
   def compact(spark: SparkSession, root: String, kind: Kind): Unit =
     // fixed, bounded plans: AQE's per-exchange materialization jobs only
-    // add driver latency ([[Tuning.microBatch]])
-    Tuning.microBatch(spark) {
+    // add driver latency ([[Regime.microBatch]])
+    Regime.run(spark, Regime.microBatch(spark))() { (spark, _) =>
       val fs = fsOf(spark, root)
       CommittedAppend.assertNoInflight(fs, root)
       recover(spark, root, kind)
@@ -123,7 +123,7 @@ object IndexStore {
   def refit(spark: SparkSession, root: String, kind: Kind, vectors: String,
       delta: Layout, afterFit: () => Unit)(
       fit: DataFrame => (DataFrame => DataFrame, String)): Unit =
-    Tuning.microBatch(spark) {
+    Regime.run(spark, Regime.microBatch(spark))() { (spark, _) =>
       val Kind(Seq((dir, layout)), Some(meta)) = kind
       val fs = fsOf(spark, root)
       CommittedAppend.assertNoInflight(fs, root)

@@ -87,12 +87,18 @@ class CollectAuditSpec extends AnyFunSuite {
         "row over the per-cell counts (sum/max coalesced so an empty " +
         "index reads as zeros, not an NPE)"))
 
-  /** A line is a Dataset-action candidate unless it is pure comment. */
-  private[graft] def isActionSite(line: String): Boolean = {
+  private def isComment(line: String): Boolean = {
     val t = line.trim
-    val comment = t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
-    !comment && CollectAuditSpec.actionRe.findFirstIn(line).isDefined
+    t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
   }
+
+  /** A line is a Dataset-action candidate unless it is pure comment. */
+  private[graft] def isActionSite(line: String): Boolean =
+    !isComment(line) && CollectAuditSpec.actionRe.findFirstIn(line).isDefined
+
+  /** A session conf set or unset, outside comments. */
+  private[graft] def isConfMutation(line: String): Boolean =
+    !isComment(line) && CollectAuditSpec.confRe.findFirstIn(line).isDefined
 
   private def mainSources(): Seq[Path] = {
     val root = Paths.get("src/main/scala")
@@ -127,7 +133,23 @@ class CollectAuditSpec extends AnyFunSuite {
       "stale whitelist entries (no matching live site):\n  " + stale.mkString("\n  "))
   }
 
+  test("no session conf is set or unset in src/main outside Regime") {
+    // a scoped set-and-restore on a caller's session leaks into every
+    // concurrent query on it, and overlapping scopes restore each other's
+    // values; fixed settings run on graft.util.Regime's clone sessions
+    val vs = for {
+      p <- mainSources() if p.getFileName.toString != "Regime.scala"
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      if isConfMutation(line)
+    } yield s"$p:${i + 1}: ${line.trim}"
+    assert(vs.isEmpty, "conf mutation outside graft.util.Regime — run the " +
+      "body in a Regime instead:\n  " + vs.mkString("\n  "))
+  }
+
   test("the matcher catches a planted violation and skips comments") {
+    assert(isConfMutation("""    spark.conf.set("spark.sql.adaptive.enabled", "false")"""))
+    assert(isConfMutation("""      case None => s.conf.unset(key)"""))
+    assert(!isConfMutation("""    // spark.conf.set(k, v) would leak"""))
     assert(isActionSite("""    val rows = df.filter(ok).collect()"""))
     assert(isActionSite("""    val r = frame.head()"""))
     assert(isActionSite("""    val r = ds.first()"""))
@@ -143,4 +165,5 @@ class CollectAuditSpec extends AnyFunSuite {
 object CollectAuditSpec {
   private val actionRe =
     """\.(collect|head|first|collectAsList|toLocalIterator)\s*\(""".r
+  private val confRe = """conf\.(set|unset)\s*\(""".r
 }

@@ -95,4 +95,33 @@ class JobBudgetSpec extends SparkSpec {
       vecs.filter($"vec_id" >= 12), 1L)))
     assert(n == 5)
   }
+
+  /** The maintenance paths run on a caller's shared session: LSH index
+    * compaction and the upsert swap with AQE off, REBALANCE compaction
+    * with AQE on at the advisory size it is passed.
+    */
+  test("maintenance: LSH compaction 4 jobs, REBALANCE compaction 3, " +
+      "upsert swap 2") {
+    import spark.implicits._
+    val root = tmp("maint")
+    val docs = (0L until 12L).map(i => (i, s"page $i about topic ${i % 3}"))
+      .toDF("doc_id", "text")
+    Dedup.writeLshIndex(docs.filter($"doc_id" < 6), s"$root/idx")
+    Dedup.appendToLshIndexCommitted(spark, s"$root/idx",
+      docs.filter($"doc_id" >= 6), 1L)
+    val lsh = jobsOf(Dedup.compactLshIndex(spark, s"$root/idx"))
+
+    spark.range(64).repartition(8).write.parquet(s"$root/frag")
+    val rebalance = jobsOf(graft.operators.Layout.compact(spark,
+      s"$root/frag", s"$root/compacted", "8MB"): Unit)
+
+    def events(ids: Range) = ids.map(i => (i.toLong,
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "click",
+        10.0 + i))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    FilePipelines.upsertBatch(events(0 until 4), s"$root/t")
+    val upsert = jobsOf(FilePipelines.upsertBatch(events(2 until 6),
+      s"$root/t"))
+    assert((lsh, rebalance, upsert) == ((4, 3, 2)))
+  }
 }

@@ -1,5 +1,7 @@
 package graft.fhir
 
+import org.apache.spark.sql.execution.{SortExec, TakeOrderedAndProjectExec}
+
 import graft.SparkSpec
 
 /** Paging values are refused before planning, naming the FHIR parameter:
@@ -35,6 +37,16 @@ class SearchPagingSpec extends SparkSpec {
     refused("Patient/p-010/_history?_count=-2", "_count")
     refused("Patient/_history?_count=x", "_count")
     refused("_history?_count=-1", "_count")
+  }
+
+  test("the default sort pages on id once, with no duplicate tiebreak key") {
+    val plan = eng.search("Patient?_count=5&_page=2").queryExecution.executedPlan
+    val orders = plan.collect {
+      case s: SortExec => s.sortOrder
+      case t: TakeOrderedAndProjectExec => t.sortOrder
+    }
+    assert(orders.map(_.count(_.references.exists(_.name == "id"))) == Seq(1),
+      plan)
   }
 
   test("valid paging still pages") {
