@@ -30,6 +30,10 @@ import org.apache.spark.sql.types._
   * driver when it doesn't. Docs (the 27K-per-537-patients fan-out in the
   * reference store, i.e. the skewed fact side) shuffle at most once on
   * doc_key. The group agg carries only (pos, ref) pairs, not whole docs.
+  * [[run]] builds ONE specimen dimension and parses the documents ONCE:
+  * both passes join the same cached dimension, the untouched-document
+  * anti-join reads the cached keyed documents, and the claimed documents
+  * of both passes go through a single [[rewriteDocs]] projection.
   */
 object AssayPipeline {
 
@@ -55,16 +59,18 @@ object AssayPipeline {
     * "last"; callers feeding one must pre-sort on an explicit version/order
     * column instead. TransformerPropertySpec pins both behaviors.
     */
-  private def specimenDim(specimens: DataFrame, idAs: String,
-      patientAs: String): DataFrame =
+  private def specimenDim(specimens: DataFrame): DataFrame =
     specimens
-      .select(col("id").as(idAs), col("subject.reference").as(patientAs),
+      .select(col("id").as("spec_id"), col("subject.reference").as("spec_patient"),
         monotonically_increasing_id().as("_ord"))
-      .groupBy(idAs)
-      .agg(max_by(col(patientAs), col("_ord")).as(patientAs))
+      .groupBy("spec_id")
+      .agg(max_by(col("spec_patient"), col("_ord")).as("spec_patient"))
 
   /** Per-group patient + specimen refs, member-order-sensitive (A22–A25). */
-  def groupLinks(groups: DataFrame, specimens: DataFrame): DataFrame = {
+  def groupLinks(groups: DataFrame, specimens: DataFrame): DataFrame =
+    linksOver(groups, specimenDim(specimens))
+
+  private def linksOver(groups: DataFrame, specDim: DataFrame): DataFrame = {
     val members = groups
       .select(col("id").as("group_id"), posexplode(col("member")).as(Seq("pos", "m")))
       .filter(col("m.entity.reference").isNotNull &&
@@ -72,7 +78,6 @@ object AssayPipeline {
       .select(col("group_id"), col("pos"),
         col("m.entity.reference").as("specimen_ref"),
         refId(col("m.entity.reference")).as("spec_id"))
-    val specDim = specimenDim(specimens, "spec_id", "spec_patient")
     members
       .join(specDim, Seq("spec_id"), "left")
       .groupBy(col("group_id"))
@@ -180,11 +185,13 @@ object AssayPipeline {
   }
 
   def run(docs: DataFrame, groups: DataFrame, specimens: DataFrame): Result = {
-    val links = groupLinks(groups, specimens)
-    // both caches are result-reachable (the Result frames read them), so
+    // the caches are result-reachable (the Result frames read them), so
     // they cannot self-unpersist — Scratch-registered for session-scoped
-    // release instead of leaking per invocation
-    val claimed = graft.util.Scratch.cached(claimedGroups(links))
+    // release instead of leaking per invocation.
+    // One specimen dimension serves pass 1's member join and pass 2's
+    // subject join, and every sink reads it from the cache.
+    val specDim = graft.util.Scratch.cached(specimenDim(specimens))
+    val claimed = graft.util.Scratch.cached(claimedGroups(linksOver(groups, specDim)))
 
     // A26: docs indexed by the id part of their subject ref (assay.py:47).
     // Cached: pass 1, pass 2, and the untouched anti-join all re-read it.
@@ -206,11 +213,11 @@ object AssayPipeline {
     val pass2Base = keyedDocs
       .filter(col("subject.reference").startsWith("Specimen/"))
       .join(claimDim.select(col("doc_key")), Seq("doc_key"), "left_anti")
-    val specDim = specimenDim(specimens, "doc_key", "patient_ref")
     // inner join = the reference's KeyError-on-missing lookup (assay.py:97):
     // a missing specimen silently drops here; A20 invariants catch it
     val pass2Docs = pass2Base
-      .join(specDim, Seq("doc_key"))
+      .join(specDim.select(col("spec_id").as("doc_key"),
+        col("spec_patient").as("patient_ref")), Seq("doc_key"))
       .withColumn("assay_id",
         call_function("uuid5_dns", concat(col("id"), lit("-assay"))))
 
@@ -220,18 +227,18 @@ object AssayPipeline {
       col("assay_id"), col("patient_ref"),
       array(col("subject.reference")).as("specimen_refs")))
 
-    val rewritten = rewriteDocs(pass1Docs.select(docs.columns.map(col) ++
-      Seq(col("assay_id"), col("patient_ref")): _*))
-      .unionByName(rewriteDocs(pass2Docs.select(docs.columns.map(col) ++
-        Seq(col("assay_id"), col("patient_ref")): _*)))
+    val claimedCols = docs.columns.map(col) ++ Seq(col("assay_id"), col("patient_ref"))
+    val rewritten = rewriteDocs(pass1Docs.select(claimedCols: _*)
+      .unionByName(pass2Docs.select(claimedCols: _*)))
 
     // untouched docs pass through verbatim (assay.py:115-117 writes ALL
-    // docs; only claimed ones were mutated)
+    // docs; only claimed ones were mutated) — read from the cached
+    // keyedDocs, so the documents are parsed once
     val claimedIds = pass1Docs.select(col("id")).union(pass2Docs.select(col("id")))
-    val untouched = docs.join(claimedIds, Seq("id"), "left_anti")
+    val untouched = keyedDocs.join(claimedIds, Seq("id"), "left_anti")
 
     val documentsOut = rewritten.select(docs.columns.map(col): _*)
-      .unionByName(untouched)
+      .unionByName(untouched.select(docs.columns.map(col): _*))
 
     // A27: drop claimed groups from the group output
     val groupsOut = groups.join(

@@ -37,7 +37,14 @@ object FhirStore {
     * union-compatible with the feed they extend.
     */
   def updateCreateRows(feed: DataFrame, batch: DataFrame,
-      lastUpdated: String): DataFrame = {
+      lastUpdated: String): DataFrame =
+    guardedRows(feed, batch, lastUpdated)._1
+
+  /** [[updateCreateRows]] and the batch's row count, which the
+    * duplicate-id guard's aggregate reads anyway.
+    */
+  private def guardedRows(feed: DataFrame, batch: DataFrame,
+      lastUpdated: String): (DataFrame, Long) = {
     // versions are assigned per BATCH (prior max + 1 joined to every
     // row), so two updates of one id inside one batch would land the
     // SAME versionId twice and corrupt the feed's (id, version)
@@ -59,9 +66,10 @@ object FhirStore {
       case "lastUpdated" => lit(lastUpdated).as("lastUpdated")
       case f => col("meta").getField(f).as(f)
     }.toSeq: _*)
-    batch.join(prior, Seq("id"), "left")
+    val rows = batch.join(prior, Seq("id"), "left")
       .withColumn("meta", newMeta)
       .select(feed.columns.map(col).toSeq: _*)
+    (rows, idStats.getLong(0))
   }
 
   /** Exactly-once update-create ingest of `batch` into the parquet
@@ -80,20 +88,15 @@ object FhirStore {
       // scale-adaptive staged width (the outFiles policy of the other
       // committed appends, r21): a micro-batch still lands one id-sorted
       // file, but a backfill-sized batch encodes core-wide instead of
-      // serializing through a single repartition(1) task — the last
-      // single-task encode the r20 parallel-append pass left behind.
-      // The batch is cached first so the width count, the duplicate-id
-      // guard aggregate, and the prior-version join all read ONE
-      // execution of what may be a derived plan.
-      val b = batch.cache()
-      try {
-        CommittedAppend.stagedSlices(
-            updateCreateRows(feedWithout(b.sparkSession, feedDir, batchId),
-              b, lastUpdated),
-            CommittedAppend.outFilesFor(spark, b.count()), col("id"))
-          .sortWithinPartitions(col("id"))
-          .write.mode("overwrite").parquet(stage)
-      } finally { b.unpersist(); () }
+      // serializing through a single repartition(1) task. The width
+      // comes from the duplicate-id guard's row count, which runs before
+      // any staging write, so a refused batch leaves no staging behind.
+      val (rows, n) = guardedRows(
+        feedWithout(batch.sparkSession, feedDir, batchId), batch, lastUpdated)
+      CommittedAppend.stagedSlices(rows,
+          CommittedAppend.outFilesFor(spark, n), col("id"))
+        .sortWithinPartitions(col("id"))
+        .write.mode("overwrite").parquet(stage)
     }
 
   /** The feed's data files minus the ones `batchId` itself promoted —

@@ -22,6 +22,16 @@ import org.apache.spark.sql.functions._
   *
   * Pure Column expressions over literal maps — broadcast-free, codegen'd,
   * O(1) per row: the same plan shape at 100 rows or 100 TB.
+  *
+  * Lower-casing takes an ASCII path. Spark's `lower()` with ICU case
+  * mappings initializes its collation support on first use: a one-time
+  * stall (about 2 s on a 4-vCPU host) inside the first task that
+  * lower-cases a string, which the write's other tasks wait for.
+  * Extensions are ASCII in practice, so an all-ASCII value (character
+  * length == byte length) is lower-cased by `translate(A–Z → a–z)`. Any
+  * other value still goes through `lower()`, so the result is exact:
+  * Python maps `.mar` + U+212A KELVIN SIGN + `down` to `.markdown`, and
+  * so does this.
   */
 object Mime {
 
@@ -61,6 +71,13 @@ object Mime {
 
   val Fallback = "application/octet-stream"
 
+  private val upper = ('A' to 'Z').mkString
+
+  /** `lower(s)`, with all-ASCII values kept off the ICU case mapping. */
+  private def lowerCase(s: Column): Column =
+    when(length(s) === octet_length(s), translate(s, upper, upper.toLowerCase))
+      .otherwise(lower(s))
+
   /** The chosen file name: URL path if it contains a dot, else title
     * (assay.py:129-133). `parse_url(url, 'PATH')` matches Python
     * `urllib.parse.urlparse(url).path` for well-formed absolute URLs but
@@ -84,9 +101,9 @@ object Mime {
     // extension remaining after stripping ext1 (for the encoding case)
     val ext2 = regexp_extract(fn, "(\\.[^./]+)\\.[^./]+$", 1)
     val effExt = coalesce(
-      element_at(typedlit(suffixNet), lower(ext1)),
+      element_at(typedlit(suffixNet), lowerCase(ext1)),
       when(ext1.isin(encodings: _*), ext2).otherwise(ext1))
     val m = typedlit(table)
-    coalesce(element_at(m, effExt), element_at(m, lower(effExt)), lit(Fallback))
+    coalesce(element_at(m, effExt), element_at(m, lowerCase(effExt)), lit(Fallback))
   }
 }

@@ -7,7 +7,8 @@ import org.apache.spark.GraftTestBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
-import graft.fhir.{FhirSearch, SearchShapes}
+import graft.fhir.{AssayPipeline, FhirIO, FhirSchemas, FhirSearch, FhirStore,
+  SearchShapes, TransformJob}
 import graft.operators.{Dedup, Similarity, Sketches}
 import graft.streaming.FilePipelines
 
@@ -18,7 +19,9 @@ import graft.streaming.FilePipelines
   * fails here deterministically.
   *
   * The counts are fixture-scale: `perfbench`'s `corpus_pipeline` reads 12
-  * jobs per admitted segment through the streaming sink, the same body.
+  * jobs per admitted segment through the streaming sink, the same body,
+  * and its `fhir_ingest` runs the transform, assay and update-create
+  * bodies pinned here.
   */
 class JobBudgetSpec extends SparkSpec {
 
@@ -123,5 +126,56 @@ class JobBudgetSpec extends SparkSpec {
     val upsert = jobsOf(FilePipelines.upsertBatch(events(2 until 6),
       s"$root/t"))
     assert((lsh, rebalance, upsert) == ((4, 3, 2)))
+  }
+
+  private val fix = SearchShapes.Dir
+
+  /** The NDJSON write carries the read/corrupt/written counts as
+    * observations; only a file with rejects re-reads it for the sink.
+    */
+  test("FHIR transform: 1 job on a clean file, 2 on a file with rejects") {
+    val out = tmp("transform")
+    val clean = jobsOf(TransformJob.run(spark, s"$fix/Specimen.ndjson",
+      s"$out/Specimen", "Specimen"): Unit)
+    val rejects = jobsOf(TransformJob.run(spark, s"$fix/corrupt.ndjson",
+      s"$out/DocumentReference", "DocumentReference"): Unit)
+    assert((clean, rejects) == ((1, 2)))
+  }
+
+  /** The feed's schema read, the duplicate-id guard (whose row count also
+    * sizes the staged width), the prior-version stage and the staging
+    * write, then the fingerprint's schema read and aggregate.
+    */
+  test("FHIR update-create: 6 jobs per batch") {
+    val feed = s"${tmp("update_create")}/feed"
+    FhirIO.readNdjson(spark, s"$fix/Patient.history.ndjson", FhirSchemas.patient)
+      .write.parquet(feed)
+    val n = jobsOf(assert(FhirStore.updateCreate(spark, feed,
+      FhirIO.readNdjson(spark, s"$fix/Patient.ingest.ndjson", FhirSchemas.patient),
+      1L, "2025-01-15T00:00:00Z")))
+    assert(n == 6)
+  }
+
+  /** One specimen dimension and one document parse feed all three sinks;
+    * most of the jobs are the adaptive planner's shuffle-stage jobs. The
+    * inputs are private copies: a cached dimension another suite built
+    * over the same fixture files would otherwise serve this run.
+    */
+  test("FHIR assay: 20 jobs for its three sink writes") {
+    val out = tmp("assay")
+    def read(t: String) = {
+      val in = java.nio.file.Paths.get(out, "in", s"$t.ndjson")
+      Files.createDirectories(in.getParent)
+      Files.copy(java.nio.file.Paths.get(fix, s"$t.ndjson"), in)
+      FhirIO.readNdjson(spark, in.toString, FhirSchemas.byType(t))
+    }
+    val n = jobsOf {
+      val res = AssayPipeline.run(read("DocumentReference"), read("Group"), read("Specimen"))
+      FhirIO.writeNdjson(res.assays, s"$out/ServiceRequest")
+      FhirIO.writeNdjson(res.documents, s"$out/DocumentReference")
+      FhirIO.writeNdjson(res.groups, s"$out/Group")
+    }
+    graft.util.Scratch.release(spark)
+    assert(n == 20)
   }
 }

@@ -51,4 +51,15 @@ class MimeSpec extends SparkSpec {
       "text/tab-separated-values", // exact miss → lowercase hit
       "application/octet-stream")) // no extension
   }
+
+  test("a non-ASCII extension still lower-cases like Python") {
+    // U+212A KELVIN SIGN lower-cases to 'k': Python's mimetypes (with the
+    // reference's add_type rows) answers text/x-markdown. An ASCII-only
+    // lower-casing would miss it and fall back to octet-stream.
+    import spark.implicits._
+    val got = Seq("notes.mar\u212Adown").toDF("title")
+      .select(Mime.infer(col("title"), lit(null).cast("string")))
+      .head().getString(0)
+    assert(got == "text/x-markdown")
+  }
 }
