@@ -1,6 +1,7 @@
 package graft.fhir
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlShims, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Union
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
@@ -76,6 +77,38 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
 
   private def historyTable(t: String): DataFrame =
     history.getOrElse(t, sys.error(s"no version history feed for: $t"))
+
+  /** The patient compartment as one relation, built and analyzed once per
+    * engine: a union of the Patient leg and one leg per
+    * [[FhirSearch.EverythingTypes]] member the store serves, each
+    * projected to (resourceType, id, `_pref`, `_lu`, `_meta`):
+    *  - `_pref`: the compartment reference (`Patient/<id>` on the Patient
+    *    leg itself, [[FhirSearch.compartmentRefParam]] elsewhere);
+    *  - `_lu`: `meta.lastUpdated`, null on types outside
+    *    [[FhirSearch.MetaTypes]];
+    *  - `_meta`: whether the type is in `MetaTypes`, so `_since` can keep
+    *    a meta-less type whole and still drop a meta row with no stamp.
+    * The legs are analyzed here, once, and joined in one n-ary `Union`
+    * node, which needs no further analysis; a `$everything` request is a
+    * Filter on top. Types the store lacks have no leg, so an engine over
+    * a partial store builds; a request naming one fails before the view
+    * is used.
+    */
+  private lazy val compartment: DataFrame = {
+    val legs = ("Patient" +: EverythingTypes).filter(store.contains).map { t =>
+      val pref =
+        if (t == "Patient") concat(lit("Patient/"), col("id"))
+        else referencePath(t, compartmentRefParam(t))
+      val lu = if (MetaTypes(t)) col("meta").getField("lastUpdated") else lit(null)
+      table(t).select(lit(t).as("resourceType"), col("id"), pref.as("_pref"),
+        lu.cast("string").as("_lu"), lit(MetaTypes(t)).as("_meta"))
+    }
+    legs match {
+      case Seq(one) => one
+      case _ => GraftSqlShims.ofRows(session,
+        Union(legs.map(_.queryExecution.analyzed)))
+    }
+  }
 
   /** Bulk export — the reference-delegated `:export` operation
     * (README.md:65 → "fhir-import-export" docs): write every served
@@ -203,40 +236,38 @@ class FhirSearch(spark: SparkSession, tables: Map[String, DataFrame],
         return lookup(need("system"), need("code"))
       case _ => ()
     }
-    // B26 Patient/{id}/$everything — the whole patient compartment: the
-    // patient read unioned with one reference-filtered scan per
-    // compartment type (the same per-type filters a compartment search
-    // plans, so each leg pushes its `Patient/{id}` literal into the
-    // scan). Result rows are (resourceType, id, mode='match') — every
-    // $everything entry is a match per the FHIR operation contract.
+    // B26 Patient/{id}/$everything — the whole patient compartment:
+    // the patient read plus every compartment-type resource whose
+    // compartment reference is `Patient/{id}`, as rows (resourceType, id,
+    // mode='match') — every $everything entry is a match per the FHIR
+    // operation contract. A request is one filter over the engine's
+    // compartment view (built and analyzed once, see [[compartment]]):
+    // Catalyst pushes it through the view's union into each leg, so every
+    // leg's scan filters on its own reference literal, as a per-type
+    // compartment search does, and a request analyzes one Filter instead
+    // of a union of per-type scans.
     // Operation params: `_type=a,b` keeps only those compartment types
-    // (the patient read always stays — it anchors the compartment);
-    // `_since=instant` keeps resources with meta.lastUpdated >= instant,
-    // both filters pushing into each leg's scan.
+    // (the patient read always stays — it anchors the compartment; the
+    // type predicate folds per leg, so a dropped leg is pruned from the
+    // plan); `_since=instant` keeps resources with meta.lastUpdated >=
+    // instant, types without server meta whole.
     request match {
       case everythingRx(id, rest) =>
         val params = parseQs(rest)
         val types = params.collectFirst { case ("_type", v) =>
           v.split(",").toSet }
         val since = params.collectFirst { case ("_since", v) => v }
-        def sinceFilter(t: String)(df: DataFrame): DataFrame = since match {
-          case Some(s) if MetaTypes(t) =>
-            df.filter(col("meta").getField("lastUpdated") >= s)
-          case _ => df
-        }
-        val pid = s"Patient/$id"
-        val patient = sinceFilter("Patient")(
-            table("Patient").filter(col("id") === id))
-          .select(lit("Patient").as("resourceType"), col("id"))
-        val children = EverythingTypes
-          .filter(t => types.forall(_.contains(t)))
-          .map { t =>
-            sinceFilter(t)(table(t)
-                .filter(referencePath(t, compartmentRefParam(t)) === pid))
-              .select(lit(t).as("resourceType"), col("id"))
-          }
-        return children.foldLeft(patient)(_ unionByName _)
-          .withColumn("mode", lit("match"))
+        val kept = EverythingTypes.filter(t => types.forall(_.contains(t)))
+        // a requested type the store lacks is an error, as a search on it is
+        ("Patient" +: kept).foreach(table)
+        val typeOk =
+          if (types.isEmpty) lit(true)
+          else col("resourceType").isin("Patient" +: kept: _*)
+        val sinceOk = since.fold(lit(true))(s =>
+          (col("_lu").isNull && !col("_meta")) || col("_lu") >= s)
+        return compartment
+          .filter(col("_pref") === s"Patient/$id" && typeOk && sinceOk)
+          .select(col("resourceType"), col("id"), lit("match").as("mode"))
           .orderBy("resourceType", "id")
       case _ => ()
     }

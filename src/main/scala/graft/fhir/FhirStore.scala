@@ -2,6 +2,7 @@ package graft.fhir
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -125,20 +126,22 @@ object FhirStore {
         "layout contract is flat top-level files; a partitioned feed " +
         "would silently drop rows from the prior-version map")
     val files = entries
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") &&
-          !n.startsWith(own)
+      .filter { e =>
+        val n = e.getPath.getName
+        e.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
+          !n.startsWith(".") && !n.startsWith(own)
       }
-      .map(_.toString)
-      .sorted
+      .sortBy(_.getPath.toString)
     require(files.nonEmpty,
       s"update-create needs a seeded feed at $feedDir (an empty store " +
         "is seeded by writing version-1 rows directly, not through " +
         "update-create against nothing)")
-    spark.read.parquet(files: _*)
+    // the schema is the first file's footer, read on the driver: the same
+    // one-file read Spark's inference makes, without its one-task job
+    val schema = GraftParquetShims.footerSchema(spark,
+        spark.sparkContext.hadoopConfiguration, files.head)
+      .getOrElse(sys.error(s"no parquet schema in ${files.head.getPath}"))
+    spark.read.schema(schema).parquet(files.map(_.getPath.toString): _*)
   }
 
   /** Current-state snapshot of a feed directory — the read-side

@@ -142,18 +142,19 @@ class JobBudgetSpec extends SparkSpec {
     assert((clean, rejects) == ((1, 2)))
   }
 
-  /** The feed's schema read, the duplicate-id guard (whose row count also
-    * sizes the staged width), the prior-version stage and the staging
-    * write, then the fingerprint's schema read and aggregate.
+  /** The duplicate-id guard (whose row count also sizes the staged
+    * width), the prior-version stage and the staging write, then the
+    * fingerprint's schema read and aggregate. The feed's schema comes
+    * from a footer read on the driver, with no job.
     */
-  test("FHIR update-create: 6 jobs per batch") {
+  test("FHIR update-create: 5 jobs per batch") {
     val feed = s"${tmp("update_create")}/feed"
     FhirIO.readNdjson(spark, s"$fix/Patient.history.ndjson", FhirSchemas.patient)
       .write.parquet(feed)
     val n = jobsOf(assert(FhirStore.updateCreate(spark, feed,
       FhirIO.readNdjson(spark, s"$fix/Patient.ingest.ndjson", FhirSchemas.patient),
       1L, "2025-01-15T00:00:00Z")))
-    assert(n == 6)
+    assert(n == 5)
   }
 
   /** One specimen dimension and one document parse feed all three sinks;
